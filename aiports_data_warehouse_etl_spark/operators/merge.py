@@ -5,7 +5,7 @@ The reference re-implements this seven times, once per table
 condition and a discarded append (§2.11 items 4-5). This is the single
 generic implementation of the *intended* semantics:
 
-    first load : write full table; delta twin = full table
+    first load : (target path absent) write full table; delta twin = full table
     otherwise  : delta = new rows NOT already in target (whole-row
                  anti-join, null-safe), write delta twin, append delta
 
@@ -46,24 +46,35 @@ def delta_merge(
     target_path: str,
     delta_path: str,
 ) -> DataFrame:
-    """Append-only SCD-0 merge keyed on the whole row; returns the delta."""
-    try:
-        existing = read_parquet(spark, target_path)
-        first_load = False
-    except Exception:
-        first_load = True
+    """Append-only SCD-0 merge keyed on the whole row; returns the delta.
 
-    if first_load:
+    Only a missing ``target_path`` is a first load. Any other failure to
+    read the target (a corrupt footer, a permission error) propagates,
+    leaving the target as it was.
+    """
+    if not _path_exists(spark, target_path):
         write_parquet(new_df, target_path, mode="overwrite")
         write_parquet(new_df, delta_path, mode="overwrite")
         return new_df
 
+    # footer inference, so a target whose schema drifted fails loudly
+    existing = read_parquet(spark, target_path)
     delta = anti_join_all_columns(new_df, existing)
     # Materialize the delta before touching its own input path.
     write_parquet(delta, delta_path, mode="overwrite")
-    delta_back = read_parquet(spark, delta_path)
+    # the schema just written is known: no footer-inference job
+    delta_back = spark.read.schema(delta.schema).parquet(delta_path)
     write_parquet(delta_back, target_path, mode="append")
     return delta_back
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop ``FileSystem.exists`` under the session's conf, so any
+    scheme the session can read (file, hdfs, s3a, ...) works."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return hpath.getFileSystem(conf).exists(hpath)
 
 
 def keyed_upsert(new_df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
