@@ -50,7 +50,7 @@ def par_floor(df: DataFrame) -> DataFrame:
     to local mode. Apply ONLY where per-ROW work dominates
     (ABBA-measured per site); stages whose cost is per-TASK init
     (model load, codebook build) get slower from N× init and keep
-    the scan layout. SPARK_GRAFT_NO_PAR_FLOOR=1 disables (A/B knob).
+    the scan layout.
 
     Caller constraint (ADVICE r12 #1): pass a SCAN-ADJACENT input
     (a raw/cached table scan plus narrow projections/filters). The
@@ -60,10 +60,6 @@ def par_floor(df: DataFrame) -> DataFrame:
     plan-build time. Every current call site is scan-adjacent; keep
     it that way or derive the count from the un-executed plan first.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_PAR_FLOOR", "") == "1":
-        return df
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     return df.repartition(par) if df.rdd.getNumPartitions() < par else df

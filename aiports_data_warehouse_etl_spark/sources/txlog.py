@@ -60,7 +60,7 @@ class ConstraintViolation(ValueError):
 
 
 _LOG_DIR = "_txlog"
-_STAGING_DIR = "_staging"  # in-flight writer intent markers (see _stage)
+_STAGING_DIR = "_staging"  # in-flight writer intent markers (see _Staging)
 _BLOOM_DIR = "_bloom"  # bloom-bitmap sidecar files (see _externalize_blooms)
 _VERSION_WIDTH = 20
 
@@ -81,6 +81,110 @@ _APPEND_REBASE_SAFE = frozenset({
     "bloom_index", "drop_bloom_index", "drop_constraint",
     "drop_generated", "drop_identity",
 })
+
+
+def _rebase_over_blind_appends(ivs: list[tuple[int, dict]]) -> str | None:
+    """Rebase rule of the read-modify-write verbs (DML, ``compact``):
+    only BLIND APPENDS (pure add — no remove, no deletion vector) and
+    identity reservations may land between the base snapshot and the
+    commit. Returns the conflict reason, ``None`` when all are safe."""
+    for i, c in ivs:
+        if c.get("op") == "reserve_identity":
+            continue  # pure metadata: touches no files
+        if c.get("op") != "append" or c.get("remove") or c.get("dv_targets"):
+            return (
+                f"conflicting concurrent commit {i} (op={c.get('op')!r}) "
+                "— only blind appends rebase; retry from a fresh snapshot"
+            )
+    return None
+
+
+def _rebase_over_policy_safe(ivs: list[tuple[int, dict]]) -> str | None:
+    """Rebase rule of the staged blind appends (``append``,
+    ``append_batch_txn``, the native streaming sink): every commit
+    since the policy snapshot must be in ``_APPEND_REBASE_SAFE``."""
+    for i, c in ivs:
+        if c.get("op") not in _APPEND_REBASE_SAFE:
+            return (
+                f"concurrent schema/policy commit v{i}:{c.get('op')} "
+                "since the policy snapshot — re-read and retry"
+            )
+    return None
+
+
+def _write_marker(table_path: str, token: str) -> None:
+    """Land the ``_staging/<token>`` intent marker — BEFORE any of the
+    token's data is written (the protocol ``vacuum`` relies on)."""
+    os.makedirs(os.path.join(table_path, _STAGING_DIR), exist_ok=True)
+    with open(os.path.join(table_path, _STAGING_DIR, token), "w") as fh:
+        json.dump({"token": token, "ts": time.time_ns()}, fh)
+
+
+def _reclaim_tokens(table_path: str, tokens) -> None:
+    """Remove staged tokens: their ``data/<token>`` dirs and markers."""
+    for token in tokens:
+        shutil.rmtree(
+            os.path.join(table_path, "data", token), ignore_errors=True
+        )
+        with contextlib.suppress(OSError):
+            os.remove(os.path.join(table_path, _STAGING_DIR, token))
+
+
+def _staged_tokens_of(commit: dict) -> set[str]:
+    """Staging tokens a commit references (its adds and DV file)."""
+    rels = [a["path"] for a in commit.get("add", [])]
+    if commit.get("dv_file"):
+        rels.append(commit["dv_file"])
+    return {r.split(os.sep)[1] for r in rels if not os.path.isabs(r)}
+
+
+class _Staging:
+    """The one owner of a write's staged files. Every ``TxLogTable``
+    write — and the native streaming sink (``txlog_sink.py``) — stages
+    through it and commits through ``_commit_or_rebase``::
+
+        with _Staging(self) as st:
+            adds, schema = st.stage(df)
+            return self._commit_or_rebase(base, commit, op, rule, stage=st)
+
+    ``_stage_and_commit`` wraps exactly this for one-frame writes.
+
+    **Reclaim guarantee.** When the ``with`` block exits — by a landed
+    commit, a no-op return, or ANY exception (``TxConflict``,
+    ``ConstraintViolation``, ``AnalysisException``, ...) — every token
+    staged through it is either referenced by the commit this write
+    landed, or removed: its ``data/<token>`` dir and its
+    ``_staging/<token>`` marker. A commit attempt that raised is
+    checked against its version file first, so files a landed commit
+    references are never removed. ``vacuum``'s marker protocol is
+    therefore only for writers that die without unwinding (crash,
+    kill)."""
+
+    def __init__(self, table: "TxLogTable") -> None:
+        self.table = table
+        self.tokens: set[str] = set()
+        #: version of the latest commit attempt that did not lose the
+        #: race (it landed, or raised before the outcome was known)
+        self.trying: int | None = None
+
+    def stage(self, df: DataFrame) -> tuple[list[dict], str]:
+        adds, schema = self.table._stage(df)
+        self.adopt(a["path"].split(os.sep)[1] for a in adds)
+        return adds, schema
+
+    def adopt(self, tokens) -> None:
+        """Take ownership of tokens staged elsewhere (sink tasks)."""
+        self.tokens.update(tokens)
+
+    def __enter__(self) -> "_Staging":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        keep: set[str] = set()
+        if self.trying is not None:
+            with contextlib.suppress(OSError, ValueError):
+                keep = _staged_tokens_of(self.table._read_commit(self.trying))
+        _reclaim_tokens(self.table.path, self.tokens - keep)
 
 
 def _version_path(table_path: str, version: int) -> str:
@@ -227,10 +331,7 @@ class TxLogTable:
         # seen the moment latest_version() returns a new head. All
         # consumers treat these as read-only (audited r13; the one
         # forward-folding consumer, changes(), copies what it
-        # mutates). SPARK_GRAFT_NO_TXLOG_MEMO=1 disables (A/B knob).
-        self._memo_enabled = (
-            os.environ.get("SPARK_GRAFT_NO_TXLOG_MEMO", "") != "1"
-        )
+        # mutates).
         self._commit_memo: dict[int, dict] = {}
         self._snap_memo: dict[int, dict] = {}
         self._read_memo: dict[int, DataFrame] = {}
@@ -251,8 +352,7 @@ class TxLogTable:
         if c is None:
             with open(_version_path(self.path, version)) as fh:
                 c = json.load(fh)
-            if self._memo_enabled:
-                self._commit_memo[version] = c
+            self._commit_memo[version] = c
         return c
 
     def _snapshot(self, version: int | None = None) -> dict:
@@ -462,13 +562,12 @@ class TxLogTable:
             for col_, filt in commit.get("blooms", {}).items():
                 state["blooms"].setdefault(col_, {}).update(filt)
         out = {"version": head, **state}
-        if self._memo_enabled:
-            # bounded: vacuum/time-travel sweeps walk many versions —
-            # keep the newest handful, which is what refresh/commit
-            # loops re-resolve
-            if len(self._snap_memo) >= 32:
-                self._snap_memo.pop(next(iter(self._snap_memo)))
-            self._snap_memo[head] = out
+        # bounded: vacuum/time-travel sweeps walk many versions — keep
+        # the newest handful, which is what refresh/commit loops
+        # re-resolve
+        if len(self._snap_memo) >= 32:
+            self._snap_memo.pop(next(iter(self._snap_memo)))
+        self._snap_memo[head] = out
         return out
 
     def _try_commit(self, version: int, commit: dict) -> bool:
@@ -652,96 +751,98 @@ class TxLogTable:
 
     # -- staging --------------------------------------------------------
 
+    def _stage_and_commit(
+        self,
+        df: DataFrame,
+        base_version: int,
+        commit: dict,
+        op: str,
+        rebase,
+        *,
+        schema_keys: tuple[str, ...] = ("add_schema",),
+        max_retries: int = 20,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """The body of every write that stages ONE frame: stage ``df``
+        (``_Staging``) and commit ``commit`` plus the staged adds, their
+        write schema under ``schema_keys`` and the optional ``txn``
+        marker (``_commit_or_rebase``)."""
+        with _Staging(self) as st:
+            adds, schema = st.stage(df)
+            commit = {**commit, "add": adds}
+            commit.update(dict.fromkeys(schema_keys, schema))
+            if txn is not None:
+                commit["txn_app"], commit["txn_id"] = txn
+            return self._commit_or_rebase(
+                base_version, commit, op, rebase,
+                stage=st, max_retries=max_retries, txn=txn,
+            )
+
     def _commit_or_rebase(
-        self, base_version: int, commit: dict, op: str
-    ) -> int:
-        """Optimistic conflict resolution — the WRITE-SERIALIZABLE
-        rebase (Delta's conflict matrix: Update/Delete/Merge/Compact
-        vs blind Insert → no conflict). The op computed its file-level
-        read/write sets against ``base_version``; when the version it
-        targets is already taken, every intervening commit is
-        inspected: a BLIND APPEND (pure add — no remove, no deletion
-        vector, no policy/protocol change) touches none of the files
-        this op read, removed, or DV-addressed, so the op's sets are
-        still valid on the newer snapshot and the commit simply
-        REBASES onto it. Anything else — a concurrent rewrite, DV,
-        constraint, restore, protocol bump — raises ``TxConflict`` for
-        the caller's retry-from-read.
+        self,
+        base_version: int,
+        commit: dict,
+        op: str,
+        rebase,
+        *,
+        stage: _Staging | None = None,
+        max_retries: int = 20,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """The ONE commit loop of every write. The op computed its
+        file-level read/write sets against ``base_version``; when the
+        version it targets is already taken, the intervening commits
+        decide. A commit carrying the same ``txn`` (app, id) means
+        another attempt of this write already landed: return ``None``.
+        Otherwise ``rebase`` (``ivs`` → conflict reason or ``None``)
+        says whether the op's sets are still valid on the newer
+        snapshot — ``_rebase_over_blind_appends`` for DML/compact
+        (Delta's write-serializable matrix), ``_rebase_over_policy_safe``
+        for staged appends, a predicate probe for ``replace_where`` —
+        and the commit REBASES onto the new head; ``rebase=None``
+        never rebases (overwrite, restore, materialize, the metadata
+        commits). A conflict raises ``TxConflict`` for the caller's
+        retry-from-read.
 
         Semantics note (the standard lakehouse default): a rebased
         DELETE/UPDATE does not see rows a concurrent append inserted
         after its snapshot — they survive untouched even where they
         match the predicate. The commit records ``rebased_onto`` so
-        the audit log shows which snapshot it actually landed on, and
-        drops its own ``schema`` when an intervening append evolved
-        the table's (the newer write wins — a rebase must never
-        silently narrow an additive evolution)."""
+        the audit log shows which snapshot it actually landed on; a
+        rewrite drops its own ``schema`` when an intervening append
+        evolved the table's (the newer write wins — a rebase must
+        never silently narrow an additive evolution), while an
+        append's schema is its files' write schema and stays."""
+        st = stage or _Staging(self)
         v = base_version + 1
-        while True:
+        for _ in range(max_retries):
+            st.trying = v
             if self._try_commit(v, commit):
                 return v
+            st.trying = None
             latest = self.latest_version()
-            iv_schema = False
-            for i in range(v, latest + 1):
-                c = self._read_commit(i)
-                if c.get("op") == "reserve_identity":
-                    continue  # pure metadata: touches no files
-                if (
-                    c.get("op") != "append"
-                    or c.get("remove")
-                    or c.get("dv_targets")
-                ):
-                    raise TxConflict(
-                        f"{op}: conflicting concurrent commit {i} "
-                        f"(op={c.get('op')!r}) — only blind appends "
-                        "rebase; retry from a fresh snapshot"
-                    )
-                if c.get("schema"):
-                    iv_schema = True
-            if iv_schema:
+            ivs = [(i, self._read_commit(i)) for i in range(v, latest + 1)]
+            if txn is not None and any(
+                (c.get("txn_app"), c.get("txn_id")) == txn for _, c in ivs
+            ):
+                return None  # another attempt of the same write won
+            why = (
+                rebase(ivs)
+                if rebase is not None
+                else f"table advanced past base snapshot v{base_version}"
+            )
+            if why is not None:
+                raise TxConflict(f"{op}: {why}")
+            if commit["op"] != "append" and any(
+                c.get("schema") for _, c in ivs
+            ):
                 commit.pop("schema", None)
             commit["rebased_onto"] = latest
             v = latest + 1
-
-    def _append_policy_conflict(
-        self, since: int, upto: int
-    ) -> str | None:
-        """First commit in ``(since, upto]`` a staged blind append may
-        NOT rebase over (see ``_APPEND_REBASE_SAFE``), rendered as
-        ``"v<version>:<op>"``; ``None`` when every intervener is safe.
-        ``since`` is the version of the policy snapshot the append
-        validated against."""
-        for i in range(since + 1, upto + 1):
-            op = self._read_commit(i).get("op")
-            if op not in _APPEND_REBASE_SAFE:
-                return f"v{i}:{op}"
-        return None
+        raise TxConflict(f"{op} lost {max_retries} commit races")
 
     def _marker_path(self, token: str) -> str:
         return os.path.join(self.path, _STAGING_DIR, token)
-
-    def _reclaim_stage(self, adds: list[dict]) -> None:
-        """Remove a staged-but-never-committed write immediately —
-        the writer is alive and KNOWS the stage is dead, so its data
-        dir and ``_staging`` marker need not linger for vacuum's
-        ``abandoned_seconds`` (ADVICE r7: append paths raised
-        TxConflict after ``_stage`` without reclaiming, while the
-        native sink's ``_TxLogStreamWriter._reclaim`` already did).
-        Tokens are recovered from the add paths (``data/<token>/…``)."""
-        prefix = "data" + os.sep
-        tokens = {
-            a["path"].split(os.sep)[1]
-            for a in adds
-            if a.get("path", "").startswith(prefix)
-        }
-        for token in tokens:
-            shutil.rmtree(
-                os.path.join(self.path, "data", token), ignore_errors=True
-            )
-            try:
-                os.remove(self._marker_path(token))
-            except OSError:
-                pass
 
     def _rewrite_width(self, hit_rel: list[str], base: dict) -> int:
         """File count for a copy-on-write REWRITE: proportional to the
@@ -1032,10 +1133,12 @@ class TxLogTable:
         )
 
     def _stage(self, df: DataFrame) -> tuple[list[dict], str]:
-        """Write ``df``'s parquet files into a fresh staging dir and
-        return their add-actions. Files are invisible until a commit
-        references them — a failed writer leaves only garbage for
-        vacuum, never a torn table.
+        """Write ``df``'s parquet files into a fresh ``data/<token>``
+        dir and return their add-actions. Files are invisible until a
+        commit references them — never a torn table. Writes call this
+        through ``_Staging.stage``, whose reclaim guarantee removes
+        the token when the write does not land it (see ``_Staging``);
+        a ``_stage`` that raises removes its own token.
 
         BEFORE any data is written, an intent marker lands in
         ``_staging/<token>`` — the concurrent-writer protocol vacuum
@@ -1046,20 +1149,22 @@ class TxLogTable:
         marker is removed when the commit referencing the token lands
         (or reaped by vacuum once the token shows up in the log)."""
         token = uuid.uuid4().hex
-        os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
-        with open(self._marker_path(token), "w") as fh:
-            json.dump({"token": token, "ts": time.time_ns()}, fh)
+        _write_marker(self.path, token)
         rel_dir = os.path.join("data", token)
         abs_dir = os.path.join(self.path, rel_dir)
-        df.write.mode("errorifexists").parquet(abs_dir)
         adds = []
-        for name in sorted(os.listdir(abs_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            rel = os.path.join(rel_dir, name)
-            adds.append(
-                {"path": rel, "stats": _file_stats(os.path.join(self.path, rel))}
-            )
+        try:
+            df.write.mode("errorifexists").parquet(abs_dir)
+            for name in sorted(os.listdir(abs_dir)):
+                if not name.endswith(".parquet"):
+                    continue
+                rel = os.path.join(rel_dir, name)
+                adds.append(
+                    {"path": rel, "stats": _file_stats(os.path.join(self.path, rel))}
+                )
+        except BaseException:
+            _reclaim_tokens(self.path, [token])
+            raise
         return adds, df.schema.json()
 
     # -- write operations ----------------------------------------------
@@ -1098,9 +1203,7 @@ class TxLogTable:
         generated per-bit gather (functions/zorder.py morton_n_col)
         with bits-per-column shrunk to fit one 64-bit lane."""
         pol = self._snapshot()
-        df = self._assign_identity(df, pol["identity"], "append")
-        df = self._apply_generated(df, pol["generated"], "append")
-        self._validate_constraints(df, pol["constraints"])
+        df = self._apply_write_policy(df, pol, "append")
         if cluster_by and zorder_by:
             raise ValueError("append: pass cluster_by OR zorder_by")
         if zorder_by:
@@ -1133,25 +1236,25 @@ class TxLogTable:
             df = df.repartitionByRange(*args).sortWithinPartitions(
                 *cluster_by
             )
-        adds, schema = self._stage(df)
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            # a rebase is only legal over interveners that change no
-            # policy/epoch — a concurrent rename/constraint/identity/
-            # protocol commit since the policy snapshot means the
-            # staged file or its validation is stale (ADVICE r6 #2)
-            bad = self._append_policy_conflict(pol["version"], v - 1)
-            if bad is not None:
-                self._reclaim_stage(adds)
-                raise TxConflict(
-                    f"append: concurrent schema/policy commit {bad} "
-                    "since the policy snapshot — re-read and retry"
-                )
-            if self._try_commit(v, {"op": "append", "add": adds,
-                                    "schema": schema}):
-                return v
-        self._reclaim_stage(adds)
-        raise TxConflict(f"append lost {max_retries} commit races")
+        # a rebase is only legal over interveners that change no
+        # policy/epoch — a concurrent rename/constraint/identity/
+        # protocol commit since the policy snapshot means the staged
+        # file or its validation is stale (ADVICE r6 #2)
+        return self._stage_and_commit(
+            df, pol["version"], {"op": "append"}, "append",
+            _rebase_over_policy_safe, schema_keys=("schema",),
+            max_retries=max_retries,
+        )
+
+    def _apply_write_policy(
+        self, df: DataFrame, snap: dict, op: str
+    ) -> DataFrame:
+        """The table policy every row-adding write applies before it
+        stages: IDENTITY ids, GENERATED columns, CHECK validation."""
+        df = self._assign_identity(df, snap["identity"], op)
+        df = self._apply_generated(df, snap["generated"], op)
+        self._validate_constraints(df, snap["constraints"])
+        return df
 
     # -- CHECK constraints ---------------------------------------------
 
@@ -1202,20 +1305,16 @@ class TxLogTable:
         base = self._snapshot()
         if base["version"] >= 0 and base["files"]:
             self._validate_constraints(self.read(), {name: check_sql})
-        v = base["version"] + 1
-        if not self._try_commit(
-            v, {"op": "set_constraint", "name": name, "check": check_sql}
-        ):
-            raise TxConflict("add_check: table advanced past base snapshot")
-        return v
+        commit = {"op": "set_constraint", "name": name, "check": check_sql}
+        return self._commit_or_rebase(
+            base["version"], commit, "add_check", None
+        )
 
     def drop_check(self, name: str) -> int:
-        v = self.latest_version() + 1
-        if not self._try_commit(
-            v, {"op": "drop_constraint", "name": name}
-        ):
-            raise TxConflict("drop_check: commit race lost")
-        return v
+        return self._commit_or_rebase(
+            self.latest_version(),
+            {"op": "drop_constraint", "name": name}, "drop_check", None,
+        )
 
     # -- generated columns ----------------------------------------------
 
@@ -1248,22 +1347,16 @@ class TxLogTable:
             self._apply_generated(
                 self.read(), {name: expr_sql}, "add_generated_column"
             )
-        v = base["version"] + 1
-        if not self._try_commit(
-            v, {"op": "set_generated", "name": name, "expr": expr_sql}
-        ):
-            raise TxConflict(
-                "add_generated_column: table advanced past base snapshot"
-            )
-        return v
+        commit = {"op": "set_generated", "name": name, "expr": expr_sql}
+        return self._commit_or_rebase(
+            base["version"], commit, "add_generated_column", None
+        )
 
     def drop_generated_column(self, name: str) -> int:
-        v = self.latest_version() + 1
-        if not self._try_commit(
-            v, {"op": "drop_generated", "name": name}
-        ):
-            raise TxConflict("drop_generated_column: commit race lost")
-        return v
+        return self._commit_or_rebase(
+            self.latest_version(), {"op": "drop_generated", "name": name},
+            "drop_generated_column", None,
+        )
 
     # -- identity columns (GENERATED ALWAYS AS IDENTITY) ------------------
 
@@ -1303,28 +1396,21 @@ class TxLogTable:
             )
             if mx is not None:
                 nxt = int(mx) + int(step)
-        v = base["version"] + 1
-        if not self._try_commit(
-            v,
-            {
-                "op": "set_identity",
-                "name": name,
-                "step": int(step),
-                "next": nxt,
-            },
-        ):
-            raise TxConflict(
-                "add_identity_column: table advanced past base snapshot"
-            )
-        return v
+        commit = {
+            "op": "set_identity",
+            "name": name,
+            "step": int(step),
+            "next": nxt,
+        }
+        return self._commit_or_rebase(
+            base["version"], commit, "add_identity_column", None
+        )
 
     def drop_identity_column(self, name: str) -> int:
-        v = self.latest_version() + 1
-        if not self._try_commit(
-            v, {"op": "drop_identity", "name": name}
-        ):
-            raise TxConflict("drop_identity_column: commit race lost")
-        return v
+        return self._commit_or_rebase(
+            self.latest_version(), {"op": "drop_identity", "name": name},
+            "drop_identity_column", None,
+        )
 
     def _reserve_identity(
         self, name: str, n: int, max_retries: int = 50
@@ -1500,11 +1586,9 @@ class TxLogTable:
             "schema": T.StructType(fields).json(),
             "base_version": base["version"],
         }
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict(
-                "rename_column: table advanced past base snapshot"
-            )
-        return base["version"] + 1
+        return self._commit_or_rebase(
+            base["version"], commit, "rename_column", None
+        )
 
     def drop_column(self, name: str) -> int:
         """DROP COLUMN without rewriting a single data file: recorded
@@ -1576,19 +1660,6 @@ class TxLogTable:
                 df = df.withColumn(n, F.expr(e))
         return df
 
-    def _refuse_generated_assignment(
-        self,
-        set_exprs: dict[str, str] | None,
-        generated: dict[str, str],
-        op: str,
-    ) -> None:
-        bad = sorted(set(set_exprs or {}) & set(generated))
-        if bad:
-            raise ValueError(
-                f"{op}: cannot assign GENERATED column(s) {bad} — "
-                "they recompute from their expression after the update"
-            )
-
     def txn_seen(self, txn_app: str, txn_id: int) -> bool:
         """True when an (app, id) transaction marker is already in the
         log. Backward scan — the newest commits are the likely hits;
@@ -1612,39 +1683,17 @@ class TxLogTable:
         guarantee is the standard one: a replayed batch id must carry
         the same rows, which Structured Streaming's checkpointed
         offsets ensure while the checkpoint is retained."""
+        # policy snapshot FIRST: commits after it reach the commit
+        # loop's txn check, so none can slip between the two reads
+        pol = self._snapshot()
         if self.txn_seen(txn_app, txn_id):
             return None
-        pol = self._snapshot()
-        df = self._assign_identity(
-            df, pol["identity"], "append_batch_txn"
+        return self._stage_and_commit(
+            self._apply_write_policy(df, pol, "append_batch_txn"),
+            pol["version"], {"op": "append"}, "append_batch_txn",
+            _rebase_over_policy_safe, schema_keys=("schema",),
+            max_retries=max_retries, txn=(txn_app, txn_id),
         )
-        df = self._apply_generated(df, pol["generated"], "append_batch_txn")
-        self._validate_constraints(df, pol["constraints"])
-        adds, schema = self._stage(df)
-        for _ in range(max_retries):
-            if self.txn_seen(txn_app, txn_id):
-                self._reclaim_stage(adds)
-                return None  # another attempt of the same batch won
-            v = self.latest_version() + 1
-            bad = self._append_policy_conflict(pol["version"], v - 1)
-            if bad is not None:
-                self._reclaim_stage(adds)
-                raise TxConflict(
-                    f"append_batch_txn: concurrent schema/policy "
-                    f"commit {bad} since the policy snapshot — "
-                    "re-read and retry"
-                )
-            commit = {
-                "op": "append",
-                "add": adds,
-                "schema": schema,
-                "txn_app": txn_app,
-                "txn_id": txn_id,
-            }
-            if self._try_commit(v, commit):
-                return v
-        self._reclaim_stage(adds)
-        raise TxConflict(f"append_batch_txn lost {max_retries} commit races")
 
     def overwrite_batch_txn(
         self, df: DataFrame, txn_app: str, txn_id: int
@@ -1655,32 +1704,12 @@ class TxLogTable:
         neither double-applies nor clobbers — it's a NO-OP. Unlike
         appends the operation does not commute, so a lost commit race
         raises TxConflict for the caller's retry-from-read."""
+        base = self._snapshot()
         if self.txn_seen(txn_app, txn_id):
             return None
-        base = self._snapshot()
-        df = self._assign_identity(
-            df, base["identity"], "overwrite_batch_txn"
+        return self._overwrite(
+            df, base, "overwrite_batch_txn", (txn_app, txn_id)
         )
-        df = self._apply_generated(
-            df, base["generated"], "overwrite_batch_txn"
-        )
-        self._validate_constraints(df, base["constraints"])
-        adds, schema = self._stage(df)
-        commit = {
-            "op": "overwrite",
-            "add": adds,
-            "remove": sorted(base["files"]),
-            "schema": schema,
-            "base_version": base["version"],
-            "txn_app": txn_app,
-            "txn_id": txn_id,
-        }
-        if not self._try_commit(base["version"] + 1, commit):
-            self._reclaim_stage(adds)
-            if self.txn_seen(txn_app, txn_id):
-                return None  # a concurrent attempt of the same batch won
-            raise TxConflict("overwrite_batch_txn: base snapshot moved")
-        return base["version"] + 1
 
     def write_stream(
         self,
@@ -1743,21 +1772,24 @@ class TxLogTable:
         file + add the staged ones). Conflicts with any concurrent
         commit — the caller asked for 'the table becomes exactly df',
         which is undefined if the base moved."""
-        base = self._snapshot()
-        df = self._assign_identity(df, base["identity"], "overwrite")
-        df = self._apply_generated(df, base["generated"], "overwrite")
-        self._validate_constraints(df, base["constraints"])
-        adds, schema = self._stage(df)
+        return self._overwrite(df, self._snapshot(), "overwrite")
+
+    def _overwrite(
+        self,
+        df: DataFrame,
+        base: dict,
+        op: str,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
         commit = {
             "op": "overwrite",
-            "add": adds,
             "remove": sorted(base["files"]),
-            "schema": schema,
             "base_version": base["version"],
         }
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict("overwrite: table advanced past base snapshot")
-        return base["version"] + 1
+        return self._stage_and_commit(
+            self._apply_write_policy(df, base, op), base["version"],
+            commit, op, None, schema_keys=("schema",), txn=txn,
+        )
 
     # -- deletion vectors ----------------------------------------------
 
@@ -1967,6 +1999,48 @@ class TxLogTable:
                     )
         return counts
 
+    def _stage_dv(
+        self, st: _Staging, hits: DataFrame
+    ) -> tuple[str, dict[str, int]] | None:
+        """Stage the deletion vector addressing ``hits`` (a filtered
+        lineage scan) and return ``(dv_file, dv_targets)``, or ``None``
+        when nothing matched (the empty stage is reclaimed by ``st``).
+        ONE pass: the per-file counts come from the staged parquet on
+        the driver (``_dv_counts``), not a second distributed scan."""
+        adds, _ = st.stage(
+            hits.select(
+                F.col("__file_rel").alias("file_rel"),
+                F.col("__row_index").alias("row_index"),
+            ).coalesce(1)
+        )
+        per_file = self._dv_counts(adds)
+        if not per_file:
+            return None
+        return adds[0]["path"], {
+            k: int(v) for k, v in sorted(per_file.items())
+        }
+
+    def _lineage_read(self, base: dict, files: list[str]) -> DataFrame:
+        """DV-aware read of ``files`` at snapshot ``base`` that keeps
+        the ``__file_rel`` / ``__row_index`` row addresses."""
+        return self._read_with_dvs(
+            files, base["dvs"], keep_lineage=True, snap=base
+        )
+
+    @staticmethod
+    def _data_cols(df: DataFrame) -> list[str]:
+        """``df``'s columns minus the lineage row addresses."""
+        return [c for c in df.columns if c not in ("__file_rel", "__row_index")]
+
+    @staticmethod
+    def _hit_files(rows: DataFrame) -> list[str]:
+        """Sorted distinct ``__file_rel`` of filtered lineage rows —
+        the files a copy-on-write op must rewrite (one job)."""
+        return sorted(
+            r["__file_rel"]
+            for r in rows.select("__file_rel").distinct().collect()
+        )
+
     def delete_where_dv(self, predicate: str) -> int:
         """MERGE-ON-READ delete: instead of rewriting every file that
         contains a matching row (``delete_where``'s copy-on-write),
@@ -1985,34 +2059,21 @@ class TxLogTable:
         if base["version"] < 0 or not base["files"]:
             return base["version"]
         self._refuse_external_refs(base, "delete_where_dv")
-        live = self._read_with_dvs(
-            self._predicate_candidates(base, predicate), base["dvs"], keep_lineage=True,
-            snap=base,
-        )
-        hits = (
-            live.filter(F.expr(predicate))
-            .select(
-                F.col("__file_rel").alias("file_rel"),
-                F.col("__row_index").alias("row_index"),
+        live = self._lineage_read(base, self._predicate_candidates(base, predicate))
+        with _Staging(self) as st:
+            dv = self._stage_dv(st, live.filter(F.expr(predicate)))
+            if dv is None:
+                return base["version"]
+            commit = {
+                "op": "delete_dv",
+                "dv_file": dv[0],
+                "dv_targets": dv[1],
+                "base_version": base["version"],
+            }
+            return self._commit_or_rebase(
+                base["version"], commit, "delete_where_dv",
+                _rebase_over_blind_appends, stage=st,
             )
-        )
-        # ONE pass: stage the DV file, then derive the per-file counts
-        # from the staged parquet on the driver (_dv_counts) — the
-        # separate distributed groupBy-count job (a second scan of the
-        # candidate files) is gone (r13)
-        adds, _ = self._stage(hits.coalesce(1))
-        per_file = self._dv_counts(adds)
-        if not per_file:
-            self._reclaim_stage(adds)
-            return base["version"]
-        dv_rel = adds[0]["path"]
-        commit = {
-            "op": "delete_dv",
-            "dv_file": dv_rel,
-            "dv_targets": {k: int(v) for k, v in sorted(per_file.items())},
-            "base_version": base["version"],
-        }
-        return self._commit_or_rebase(base["version"], commit, "delete_where_dv")
 
     def delete_where(self, predicate: str) -> int:
         """Copy-on-write delete: ONLY files that actually contain a
@@ -2025,45 +2086,31 @@ class TxLogTable:
         self._refuse_external_refs(base, "delete_where")
         # DV-aware lineage scan: rows already deleted by a deletion
         # vector must neither count as hits nor survive into rewrites
-        df = self._read_with_dvs(
-            self._predicate_candidates(base, predicate), base["dvs"], keep_lineage=True,
-            snap=base,
-        )
-        hit_rel = sorted(
-            r["__file_rel"]
-            for r in df.filter(F.expr(predicate))
-            .select("__file_rel")
-            .distinct()
-            .collect()
-        )
+        df = self._lineage_read(base, self._predicate_candidates(base, predicate))
+        hit_rel = self._hit_files(df.filter(F.expr(predicate)))
         if not hit_rel:
             return base["version"]
         # SQL DELETE semantics: remove only rows where the predicate is
         # TRUE — rows where it evaluates NULL (e.g. `col = 5` on a NULL
         # col) must SURVIVE, so the keep-filter is NOT(pred) OR ISNULL
         pred = F.expr(predicate)
-        data_cols = [
-            c for c in df.columns if c not in ("__file_rel", "__row_index")
-        ]
+        data_cols = self._data_cols(df)
         survivors = (
-            self._read_with_dvs(
-                hit_rel, base["dvs"], keep_lineage=True, snap=base
-            )
+            self._lineage_read(base, hit_rel)
             .filter(~pred | pred.isNull())
             .select(*data_cols)
-        )
-        adds, add_schema = self._stage(
-            survivors.coalesce(self._rewrite_width(hit_rel, base))
         )
         commit = {
             "op": "delete",
             "predicate": predicate,
-            "add": adds,
-            "add_schema": add_schema,
             "remove": hit_rel,
             "base_version": base["version"],
         }
-        return self._commit_or_rebase(base["version"], commit, "delete_where")
+        return self._stage_and_commit(
+            survivors.coalesce(self._rewrite_width(hit_rel, base)),
+            base["version"], commit, "delete_where",
+            _rebase_over_blind_appends,
+        )
 
     def _require_unique_keys(
         self, src: DataFrame, keys: list[str], op: str
@@ -2127,31 +2174,20 @@ class TxLogTable:
         # not merge targets and must not survive into rewrites); the
         # lineage columns come from _metadata ON the scan, before the
         # semi-join brings in the source relation
-        tgt = self._read_with_dvs(
-            self._key_candidates(base, src, keys, pre=pre),
-            base["dvs"], keep_lineage=True,
-            snap=base,
+        tgt = self._lineage_read(
+            base, self._key_candidates(base, src, keys, pre=pre)
         )
         src_keys = src.select(*keys).distinct()
-        hit_rel = sorted(
-            r["__file_rel"]
-            for r in tgt.select("__file_rel", *keys)
-            .join(F.broadcast(src_keys), keys, "left_semi")
-            .select("__file_rel")
-            .distinct()
-            .collect()
+        hit_rel = self._hit_files(
+            tgt.select("__file_rel", *keys).join(
+                F.broadcast(src_keys), keys, "left_semi"
+            )
         )
         survivors = None
         if hit_rel:
-            data_cols = [
-                c
-                for c in tgt.columns
-                if c not in ("__file_rel", "__row_index")
-            ]
+            data_cols = self._data_cols(tgt)
             survivors = (
-                self._read_with_dvs(
-                hit_rel, base["dvs"], keep_lineage=True, snap=base
-            )
+                self._lineage_read(base, hit_rel)
                 .select(*data_cols)
                 .join(F.broadcast(src_keys), keys, "left_anti")
             )
@@ -2164,17 +2200,17 @@ class TxLogTable:
             new_data = new_data.coalesce(
                 self._merge_width(hit_rel, base, src)
             )
-        adds, schema = self._stage(new_data)
         commit = {
             "op": "merge",
             "keys": list(keys),
-            "add": adds,
-            "add_schema": schema,
             "remove": hit_rel,
-            "schema": schema,
             "base_version": base["version"],
         }
-        return self._commit_or_rebase(base["version"], commit, "merge_upsert")
+        return self._stage_and_commit(
+            new_data, base["version"], commit, "merge_upsert",
+            _rebase_over_blind_appends,
+            schema_keys=("add_schema", "schema"),
+        )
 
     def merge(
         self,
@@ -2227,14 +2263,6 @@ class TxLogTable:
             )
         base = self._snapshot()
         self._refuse_external_refs(base, "merge")
-        self._refuse_generated_assignment(
-            update_set, base["generated"], "merge"
-        )
-        bad_ident = sorted(set(update_set or {}) & set(base["identity"]))
-        if bad_ident:
-            raise ValueError(
-                f"merge: cannot assign IDENTITY column(s) {bad_ident}"
-            )
         if set(base["identity"]) & set(source.columns):
             raise ValueError(
                 "merge: the source supplies GENERATED ALWAYS AS "
@@ -2263,19 +2291,12 @@ class TxLogTable:
                 return base["version"]
             return self.append(new_rows)
 
-        tgt = self._read_with_dvs(
-            self._key_candidates(base, source, keys, pre=pre),
-            base["dvs"], keep_lineage=True,
-            snap=base,
+        tgt = self._lineage_read(
+            base, self._key_candidates(base, source, keys, pre=pre)
         )
-        data_cols = [
-            c for c in tgt.columns if c not in ("__file_rel", "__row_index")
-        ]
-        unknown = sorted(set(update_set or {}) - set(data_cols))
-        if unknown:
-            raise ValueError(
-                f"merge: update_set targets unknown column(s) {unknown}"
-            )
+        data_cols = self._data_cols(tgt)
+        if update_set is not None:
+            self._check_set_clause(update_set, data_cols, base, "merge")
         tgt_types = dict(tgt.dtypes)
         join_on = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
         src = source.withColumn("__s_hit", F.lit(1)).alias("s")
@@ -2290,19 +2311,11 @@ class TxLogTable:
             else F.lit(False)
         )
         # Files that contain at least one row the merge CHANGES
-        hit_rel = sorted(
-            r["__file_rel"]
-            for r in joined.filter(del_fires | upd_fires)
-            .select(F.col("t.__file_rel").alias("__file_rel"))
-            .distinct()
-            .collect()
-        )
+        hit_rel = self._hit_files(joined.filter(del_fires | upd_fires))
         survivors = None
         if hit_rel:
             hit = (
-                self._read_with_dvs(
-                hit_rel, base["dvs"], keep_lineage=True, snap=base
-            )
+                self._lineage_read(base, hit_rel)
                 .alias("t")
                 .join(src, join_on, "left")
             )
@@ -2368,21 +2381,25 @@ class TxLogTable:
                 else self._rewrite_width(hit_rel, base)
             )
             new_data = new_data.coalesce(width)
-        adds, add_schema = self._stage(new_data)
         commit = {
             "op": "merge",
             "keys": list(keys),
-            "add": adds,
-            "add_schema": add_schema,
             "remove": hit_rel,
             "schema": base["schema"],
             "base_version": base["version"],
         }
-        return self._commit_or_rebase(base["version"], commit, "merge")
+        return self._stage_and_commit(
+            new_data, base["version"], commit, "merge",
+            _rebase_over_blind_appends,
+        )
 
-    def _check_set_exprs(
-        self, set_exprs: dict[str, str], data_cols: list[str], op: str
+    @staticmethod
+    def _check_set_clause(
+        set_exprs: dict[str, str], data_cols: list[str], base: dict, op: str
     ) -> None:
+        """The UPDATE/MERGE SET guard: refuse an empty clause, unknown
+        columns, and assignments to GENERATED columns (they recompute
+        from their expression after the update) or IDENTITY columns."""
         if not set_exprs:
             raise ValueError(f"{op}: empty SET clause")
         unknown = sorted(set(set_exprs) - set(data_cols))
@@ -2390,6 +2407,15 @@ class TxLogTable:
             raise ValueError(
                 f"{op}: SET targets unknown column(s) {unknown}"
             )
+        bad = sorted(set(set_exprs) & set(base["generated"]))
+        if bad:
+            raise ValueError(
+                f"{op}: cannot assign GENERATED column(s) {bad} — "
+                "they recompute from their expression after the update"
+            )
+        bad = sorted(set(set_exprs) & set(base["identity"]))
+        if bad:
+            raise ValueError(f"{op}: cannot assign IDENTITY column(s) {bad}")
 
     @staticmethod
     def _apply_set(
@@ -2434,51 +2460,31 @@ class TxLogTable:
         if base["version"] < 0 or not base["files"]:
             return base["version"]
         self._refuse_external_refs(base, "update_where")
-        df = self._read_with_dvs(
-            self._predicate_candidates(base, predicate), base["dvs"], keep_lineage=True,
-            snap=base,
-        )
-        data_cols = [
-            c for c in df.columns if c not in ("__file_rel", "__row_index")
-        ]
-        self._check_set_exprs(set_exprs, data_cols, "update_where")
-        self._refuse_generated_assignment(
-            set_exprs, base["generated"], "update_where"
-        )
-        bad_ident = sorted(set(set_exprs) & set(base["identity"]))
-        if bad_ident:
-            raise ValueError(
-                f"update_where: cannot assign IDENTITY column(s) {bad_ident}"
-            )
-        hit_rel = sorted(
-            r["__file_rel"]
-            for r in df.filter(F.expr(predicate))
-            .select("__file_rel")
-            .distinct()
-            .collect()
-        )
+        df = self._lineage_read(base, self._predicate_candidates(base, predicate))
+        data_cols = self._data_cols(df)
+        self._check_set_clause(set_exprs, data_cols, base, "update_where")
+        hit_rel = self._hit_files(df.filter(F.expr(predicate)))
         if not hit_rel:
             return base["version"]
         fires = F.coalesce(F.expr(predicate), F.lit(False))
         tgt_types = dict(df.dtypes)
-        rewritten = self._read_with_dvs(
-            hit_rel, base["dvs"], keep_lineage=True, snap=base
-        ).select(*self._apply_set(set_exprs, data_cols, tgt_types, fires))
+        rewritten = self._lineage_read(base, hit_rel).select(
+            *self._apply_set(set_exprs, data_cols, tgt_types, fires)
+        )
         rewritten = self._regen(rewritten, base["generated"])
         self._validate_constraints(rewritten, base["constraints"])
-        adds, add_schema = self._stage(
-            rewritten.coalesce(self._rewrite_width(hit_rel, base))
-        )
         commit = {
             "op": "update",
             "predicate": predicate,
             "set": dict(sorted(set_exprs.items())),
-            "add": adds,
-            "add_schema": add_schema,
             "remove": hit_rel,
             "base_version": base["version"],
         }
-        return self._commit_or_rebase(base["version"], commit, "update_where")
+        return self._stage_and_commit(
+            rewritten.coalesce(self._rewrite_width(hit_rel, base)),
+            base["version"], commit, "update_where",
+            _rebase_over_blind_appends,
+        )
 
     def update_where_mor(
         self, predicate: str, set_exprs: dict[str, str]
@@ -2501,66 +2507,40 @@ class TxLogTable:
         if base["version"] < 0 or not base["files"]:
             return base["version"]
         self._refuse_external_refs(base, "update_where_mor")
-        live = self._read_with_dvs(
-            self._predicate_candidates(base, predicate), base["dvs"], keep_lineage=True,
-            snap=base,
-        )
-        data_cols = [
-            c
-            for c in live.columns
-            if c not in ("__file_rel", "__row_index")
-        ]
-        self._check_set_exprs(set_exprs, data_cols, "update_where_mor")
-        self._refuse_generated_assignment(
-            set_exprs, base["generated"], "update_where_mor"
-        )
-        bad_ident = sorted(set(set_exprs) & set(base["identity"]))
-        if bad_ident:
-            raise ValueError(
-                f"update_where_mor: cannot assign IDENTITY column(s) {bad_ident}"
-            )
+        live = self._lineage_read(base, self._predicate_candidates(base, predicate))
+        data_cols = self._data_cols(live)
+        self._check_set_clause(set_exprs, data_cols, base, "update_where_mor")
         hits = live.filter(F.expr(predicate))
-        # ONE pass for hit discovery: stage the DV file first and
-        # derive the per-file counts from the staged parquet on the
-        # driver (_dv_counts) — the separate distributed
-        # groupBy-count job (an extra scan of the candidates) is gone
-        # (r13). A no-hit update reclaims the (empty) staged file.
-        dv_adds, _ = self._stage(
-            hits.select(
-                F.col("__file_rel").alias("file_rel"),
-                F.col("__row_index").alias("row_index"),
-            ).coalesce(1)
-        )
-        per_file = self._dv_counts(dv_adds)
-        if not per_file:
-            self._reclaim_stage(dv_adds)
-            return base["version"]
-        tgt_types = dict(live.dtypes)
-        updated = self._regen(
-            hits.select(
-                *self._apply_set(
-                    set_exprs, data_cols, tgt_types, F.lit(True)
-                )
-            ),
-            base["generated"],
-        )
-        try:
+        with _Staging(self) as st:
+            # hit discovery IS the DV stage-write (_stage_dv)
+            dv = self._stage_dv(st, hits)
+            if dv is None:
+                return base["version"]
+            tgt_types = dict(live.dtypes)
+            updated = self._regen(
+                hits.select(
+                    *self._apply_set(
+                        set_exprs, data_cols, tgt_types, F.lit(True)
+                    )
+                ),
+                base["generated"],
+            )
             self._validate_constraints(updated, base["constraints"])
-        except ConstraintViolation:
-            self._reclaim_stage(dv_adds)
-            raise
-        adds, add_schema = self._stage(updated)
-        commit = {
-            "op": "update_mor",
-            "predicate": predicate,
-            "set": dict(sorted(set_exprs.items())),
-            "dv_file": dv_adds[0]["path"],
-            "dv_targets": {k: int(v) for k, v in sorted(per_file.items())},
-            "add": adds,
-            "add_schema": add_schema,
-            "base_version": base["version"],
-        }
-        return self._commit_or_rebase(base["version"], commit, "update_where_mor")
+            adds, add_schema = st.stage(updated)
+            commit = {
+                "op": "update_mor",
+                "predicate": predicate,
+                "set": dict(sorted(set_exprs.items())),
+                "dv_file": dv[0],
+                "dv_targets": dv[1],
+                "add": adds,
+                "add_schema": add_schema,
+                "base_version": base["version"],
+            }
+            return self._commit_or_rebase(
+                base["version"], commit, "update_where_mor",
+                _rebase_over_blind_appends, stage=st,
+            )
 
     def replace_where(self, df: DataFrame, predicate: str) -> int:
         """Atomic predicate-scoped overwrite (Delta's ``replaceWhere``
@@ -2577,11 +2557,7 @@ class TxLogTable:
         by reference."""
         base = self._snapshot()
         self._refuse_external_refs(base, "replace_where")
-        df = self._assign_identity(
-            df, base["identity"], "replace_where"
-        )
-        df = self._apply_generated(df, base["generated"], "replace_where")
-        self._validate_constraints(df, base["constraints"])
+        df = self._apply_write_policy(df, base, "replace_where")
         pred = F.expr(predicate)
         stray = df.filter(~pred | pred.isNull()).limit(1).collect()
         if stray:
@@ -2592,107 +2568,77 @@ class TxLogTable:
             )
         if base["version"] < 0 or not base["files"]:
             return self.append(df)
-        live = self._read_with_dvs(
-            self._predicate_candidates(base, predicate), base["dvs"], keep_lineage=True,
-            snap=base,
-        )
-        hit_rel = sorted(
-            r["__file_rel"]
-            for r in live.filter(pred)
-            .select("__file_rel")
-            .distinct()
-            .collect()
-        )
-        data_cols = [
-            c
-            for c in live.columns
-            if c not in ("__file_rel", "__row_index")
-        ]
+        live = self._lineage_read(base, self._predicate_candidates(base, predicate))
+        hit_rel = self._hit_files(live.filter(pred))
+        data_cols = self._data_cols(live)
+
+        def appends_outside_slice(ivs: list[tuple[int, dict]]) -> str | None:
+            # a rebase over a concurrent blind append is only sound if
+            # the appended rows lie OUTSIDE the replaced slice —
+            # rebasing over an append INTO the slice would break the
+            # "table becomes exactly df for the slice" idempotent-
+            # reload contract (Delta raises ConcurrentAppendException
+            # when concurrently added files match replaceWhere; ADVICE
+            # r6 #5). So the intervening appends' files are probed
+            # against the predicate (one limit(1) scan of just those
+            # files); a hit — or anything unprovable (schema drift,
+            # unreadable) — conflicts.
+            why = _rebase_over_blind_appends(ivs)
+            new_rel = sorted(
+                {a["path"] for _, c in ivs for a in c.get("add", [])}
+            )
+            if why is not None or not new_rel:
+                return why
+            paths = [
+                r if os.path.isabs(r) else os.path.join(self.path, r)
+                for r in new_rel
+            ]
+            try:
+                appended_hit = bool(
+                    self.spark.read.parquet(*paths)
+                    .filter(pred)
+                    .limit(1)
+                    .collect()
+                )
+            except Exception:
+                appended_hit = True  # can't prove disjoint
+            if appended_hit:
+                return (
+                    "concurrent append added rows inside the replaced "
+                    f"slice {predicate!r} — retry from a fresh snapshot"
+                )
+            return None
+
         adds: list[dict] = []
         file_schemas: dict[str, str] = {}
-        if hit_rel:
-            survivors = (
-                self._read_with_dvs(
-                hit_rel, base["dvs"], keep_lineage=True, snap=base
+        with _Staging(self) as st:
+            if hit_rel:
+                survivors = (
+                    self._lineage_read(base, hit_rel)
+                    .filter(~pred | pred.isNull())
+                    .select(*data_cols)
+                )
+                s_adds, s_schema = st.stage(
+                    survivors.coalesce(self._rewrite_width(hit_rel, base))
+                )
+                adds.extend(s_adds)
+                file_schemas.update({a["path"]: s_schema for a in s_adds})
+            n_adds, schema = st.stage(df)
+            adds.extend(n_adds)
+            file_schemas.update({a["path"]: schema for a in n_adds})
+            commit = {
+                "op": "replace_where",
+                "predicate": predicate,
+                "add": adds,
+                "remove": hit_rel,
+                "schema": schema,
+                "file_schemas": file_schemas,
+                "base_version": base["version"],
+            }
+            return self._commit_or_rebase(
+                base["version"], commit, "replace_where",
+                appends_outside_slice, stage=st,
             )
-                .filter(~pred | pred.isNull())
-                .select(*data_cols)
-            )
-            s_adds, s_schema = self._stage(
-                survivors.coalesce(self._rewrite_width(hit_rel, base))
-            )
-            adds.extend(s_adds)
-            file_schemas.update({a["path"]: s_schema for a in s_adds})
-        n_adds, schema = self._stage(df)
-        adds.extend(n_adds)
-        file_schemas.update({a["path"]: schema for a in n_adds})
-        commit = {
-            "op": "replace_where",
-            "predicate": predicate,
-            "add": adds,
-            "remove": hit_rel,
-            "schema": schema,
-            "file_schemas": file_schemas,
-            "base_version": base["version"],
-        }
-        # NOT _commit_or_rebase: a rebase over a concurrent blind
-        # append is only sound here if the appended rows lie OUTSIDE
-        # the replaced slice — rebasing over an append INTO the slice
-        # would break the "table becomes exactly df for the slice"
-        # idempotent-reload contract (Delta raises
-        # ConcurrentAppendException when concurrently added files
-        # match replaceWhere; ADVICE r6 #5). So each intervening blind
-        # append's files are probed against the predicate (one
-        # limit(1) scan of just those files); a hit — or anything
-        # unprovable (schema drift, unreadable) — conflicts.
-        v = base["version"] + 1
-        while True:
-            if self._try_commit(v, commit):
-                return v
-            latest = self.latest_version()
-            iv_schema = False
-            new_rel: list[str] = []
-            for i in range(v, latest + 1):
-                c = self._read_commit(i)
-                if c.get("op") == "reserve_identity":
-                    continue
-                if (
-                    c.get("op") != "append"
-                    or c.get("remove")
-                    or c.get("dv_targets")
-                ):
-                    raise TxConflict(
-                        f"replace_where: conflicting concurrent commit "
-                        f"{i} (op={c.get('op')!r}) — retry from a "
-                        "fresh snapshot"
-                    )
-                if c.get("schema"):
-                    iv_schema = True
-                new_rel += [a["path"] for a in c.get("add", [])]
-            if new_rel:
-                paths = [
-                    r if os.path.isabs(r) else os.path.join(self.path, r)
-                    for r in sorted(set(new_rel))
-                ]
-                try:
-                    appended_hit = bool(
-                        self.spark.read.parquet(*paths)
-                        .filter(pred)
-                        .limit(1)
-                        .collect()
-                    )
-                except Exception:
-                    appended_hit = True  # can't prove disjoint
-                if appended_hit:
-                    raise TxConflict(
-                        "replace_where: concurrent append added rows "
-                        f"inside the replaced slice {predicate!r} — "
-                        "retry from a fresh snapshot"
-                    )
-            if iv_schema:
-                commit.pop("schema", None)
-            commit["rebased_onto"] = latest
-            v = latest + 1
 
     def compact(
         self,
@@ -2755,15 +2701,15 @@ class TxLogTable:
             ).sortWithinPartitions(*sort_by)
         else:
             packed = packed.repartition(int(n_out))
-        adds, add_schema = self._stage(packed)
         commit = {
             "op": "compact",
-            "add": adds,
-            "add_schema": add_schema,
             "remove": small,
             "base_version": base["version"],
         }
-        return self._commit_or_rebase(base["version"], commit, "compact")
+        return self._stage_and_commit(
+            packed, base["version"], commit, "compact",
+            _rebase_over_blind_appends,
+        )
 
     # -- read path ------------------------------------------------------
 
@@ -2879,12 +2825,7 @@ class TxLogTable:
             "blooms": blooms,
             "base_version": base["version"],
         }
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict(
-                f"restore of {self.path} lost the race at version "
-                f"{base['version'] + 1}"
-            )
-        return base["version"] + 1
+        return self._commit_or_rebase(base["version"], commit, "restore", None)
 
     def shallow_clone(self, dest_path: str) -> "TxLogTable":
         """Zero-copy CLONE (Delta SHALLOW CLONE): a new table whose
@@ -2978,17 +2919,16 @@ class TxLogTable:
             )
             if not ext:
                 return base["version"]
-            local = self._read_with_dvs(ext, base["dvs"], snap=base)
-            adds, add_schema = self._stage(local)
             commit = {
                 "op": "materialize",
-                "add": adds,
-                "add_schema": add_schema,
                 "remove": ext,
                 "base_version": base["version"],
             }
-            if self._try_commit(base["version"] + 1, commit):
-                return base["version"] + 1
+            with contextlib.suppress(TxConflict):  # retry from a re-read
+                return self._stage_and_commit(
+                    self._read_with_dvs(ext, base["dvs"], snap=base),
+                    base["version"], commit, "materialize", None,
+                )
         raise TxConflict(f"materialize of {self.path} kept losing races")
 
     def _refuse_external_refs(self, snap: dict, op: str) -> None:
@@ -3032,11 +2972,9 @@ class TxLogTable:
             "min_writer": int(min_writer),
             "base_version": base["version"],
         }
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict(
-                f"protocol upgrade of {self.path} lost the race"
-            )
-        return base["version"] + 1
+        return self._commit_or_rebase(
+            base["version"], commit, "upgrade_protocol", None
+        )
 
     def describe_history(self) -> DataFrame:
         """DESCRIBE HISTORY: one row per commit, computed from log
@@ -3279,11 +3217,9 @@ class TxLogTable:
             "filters": filters,
             "base_version": base["version"],
         }
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict(
-                "add_bloom_index: table advanced past base snapshot"
-            )
-        return base["version"] + 1
+        return self._commit_or_rebase(
+            base["version"], commit, "add_bloom_index", None
+        )
 
     def drop_bloom_index(self, col: str) -> int:
         """Unregister the bloom index on ``col``: existing bitmaps
@@ -3295,11 +3231,9 @@ class TxLogTable:
             raise ValueError(f"drop_bloom_index: no index on {col!r}")
         commit = {"op": "drop_bloom_index", "col": col,
                   "base_version": base["version"]}
-        if not self._try_commit(base["version"] + 1, commit):
-            raise TxConflict(
-                "drop_bloom_index: table advanced past base snapshot"
-            )
-        return base["version"] + 1
+        return self._commit_or_rebase(
+            base["version"], commit, "drop_bloom_index", None
+        )
 
     def _bloom_may_contain(
         self, filt: dict, positions_raw: list[int]
@@ -3422,7 +3356,7 @@ class TxLogTable:
         # null) is the additive-evolution contract. Deletion vectors
         # (merge-on-read deletes) are applied inside _read_with_dvs.
         out = self._read_with_dvs(sorted(files), snap["dvs"], snap=snap)
-        if memo_key is not None and self._memo_enabled:
+        if memo_key is not None:
             if len(self._read_memo) >= 8:
                 self._read_memo.pop(next(iter(self._read_memo)))
             self._read_memo[memo_key] = out
@@ -3532,11 +3466,7 @@ class TxLogTable:
                     targets, {}, keep_lineage=True, renames=rn, epochs=fe,
                     sch_of=sch_of,
                 )
-                data_cols = [
-                    col
-                    for col in data.columns
-                    if col not in ("__file_rel", "__row_index")
-                ]
+                data_cols = self._data_cols(data)
                 dv = self.spark.read.schema(
                     "file_rel string, row_index bigint"
                 ).parquet(dv_abs).select(
@@ -3845,7 +3775,9 @@ class TxLogTable:
         1. **Staging-token manifests** (VERDICT r3 #7): ``_stage``
            writes an intent marker in ``_staging/<token>`` BEFORE any
            data; the marker disappears when the commit referencing
-           the token lands. An unreferenced file whose token has a
+           the token lands, and a write that unwinds without landing
+           removes marker and data itself (``_Staging``'s reclaim
+           guarantee). An unreferenced file whose token has a
            live marker is in-flight and is NEVER deleted — even if
            its mtime lies arbitrarily in the past (object-store
            writers don't share the vacuum host's clock). The marker

@@ -12,7 +12,11 @@ write task streams its partition's Arrow record batches STRAIGHT into
 a staged parquet file (the same marker-first staging protocol as
 ``TxLogTable._stage``, so vacuum can never reap an in-flight file),
 and the driver's ``commit()`` folds every task's add-action into ONE
-atomic log commit carrying an (app, batchId) transaction marker.
+atomic log commit carrying an (app, batchId) transaction marker. The
+commit adopts every task's token into ``txlog._Staging`` and lands
+through ``TxLogTable._commit_or_rebase``, so a batch that does not
+land leaves no staged file behind (the guarantee is stated once, on
+``_Staging``).
 
 Identity contract (the Delta ``txnAppId`` rule): the idempotence key
 is ``(txn_app, batchId)`` and batch ids restart at 0 per checkpoint —
@@ -24,10 +28,10 @@ by the first query's marker.
 
 Exactly-once story, same contract as ``append_batch_txn``:
 - a replayed batch (crash between sink commit and Spark's offset
-  checkpoint) finds its marker already in the log → the re-staged
-  files are reclaimed immediately and the commit is a no-op;
-- a failed batch never commits — ``abort()`` (and vacuum, for a
-  driver that died before abort) reclaims the staged files;
+  checkpoint) finds its marker already in the log → the commit is a
+  no-op and the re-staged files are reclaimed;
+- a failed batch never commits — ``commit()`` unwinding, ``abort()``,
+  and (for a driver that died first) vacuum reclaim the staged files;
 - CHECK constraints are validated on the STAGED files before the
   commit lands, so the write-time contract holds on this path too
   (a violating micro-batch leaves no trace but the reclaimed stage).
@@ -43,10 +47,7 @@ log-structured, exactly-once replacement for its streaming twin.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -55,9 +56,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     WriterCommitMessage,
 )
-
-_LOG_DIR = "_txlog"
-_STAGING_DIR = "_staging"
 
 
 @dataclass
@@ -97,19 +95,14 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
 
         from aiports_data_warehouse_etl_spark.sources.txlog import (
             _file_stats,
+            _write_marker,
         )
 
         batches = [b for b in iterator if b.num_rows > 0]
         if not batches:
             return _TxLogCommitMessage()  # empty task: nothing staged
         token = uuid.uuid4().hex
-        # marker BEFORE data — the concurrent-writer protocol vacuum
-        # relies on (see TxLogTable._stage)
-        os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
-        with open(
-            os.path.join(self.path, _STAGING_DIR, token), "w"
-        ) as fh:
-            json.dump({"token": token, "ts": time.time_ns()}, fh)
+        _write_marker(self.path, token)  # BEFORE data (vacuum protocol)
         rel_dir = os.path.join("data", token)
         abs_dir = os.path.join(self.path, rel_dir)
         os.makedirs(abs_dir)
@@ -123,19 +116,9 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
 
     # -- driver: fold task stages into ONE idempotent commit -----------
 
-    def _reclaim(self, messages) -> None:
-        """Delete staged dirs + markers for a no-op/aborted batch."""
-        for m in messages:
-            if m is None or not m.token:
-                continue
-            shutil.rmtree(
-                os.path.join(self.path, "data", m.token),
-                ignore_errors=True,
-            )
-            try:
-                os.remove(os.path.join(self.path, _STAGING_DIR, m.token))
-            except OSError:
-                pass
+    @staticmethod
+    def _tokens(messages) -> list[str]:
+        return [m.token for m in messages if m is not None and m.token]
 
     def _validate_staged(self, adds: list[dict], constraints: dict) -> None:
         """CHECK validation WITHOUT a SparkSession: the Python
@@ -180,6 +163,8 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
         from aiports_data_warehouse_etl_spark.sources.txlog import (
             TxConflict,
             TxLogTable,
+            _rebase_over_policy_safe,
+            _Staging,
         )
 
         adds = [a for m in messages if m is not None for a in m.adds]
@@ -188,84 +173,73 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
         # spark=None: every operation on this path (txn scan, snapshot
         # fold, atomic commit) is pure JSON metadata — no data read
         t = TxLogTable(None, self.path)
-        if t.txn_seen(self.app, int(batchId)):
-            # replayed batch: the original commit already holds these
-            # rows — reclaim this attempt's stage and no-op
-            self._reclaim(messages)
-            return
-        snap = t._snapshot()
-        # rename/drop since STREAM START (not just since this batch's
-        # snapshot): staged files carry the stream-start physical
-        # names, so any epoch bump in the stream's lifetime means this
-        # and every later batch would land stale names under the new
-        # epoch. Incremental scan — each commit only reads the log
-        # suffix it hasn't inspected yet.
-        for i in range(self._rename_checked_upto + 1, snap["version"] + 1):
-            if t._read_commit(i).get("op") == "rename_column":
-                self._reclaim(messages)
-                raise TxConflict(
-                    f"txlog sink: column rename/drop at table version "
-                    f"{i} during the stream's lifetime — the sink's "
-                    "write schema is stale; restart the stream"
-                )
-        self._rename_checked_upto = snap["version"]
-        if snap.get("identity"):
-            # id assignment needs reservation + a Spark job; the sink's
-            # commit worker has neither — fail shut, point at the
-            # foreachBatch sink which routes through append_batch_txn
-            self._reclaim(messages)
-            raise ValueError(
-                "txlog sink: table has GENERATED ALWAYS AS IDENTITY "
-                f"column(s) {sorted(snap['identity'])} — use "
-                "TxLogTable.write_stream (foreachBatch) for identity "
-                "tables; this sink cannot assign ids"
-            )
-        checks = dict(snap["constraints"])
-        for name, expr in snap.get("generated", {}).items():
-            # generated columns validate as equality CHECKs here; the
-            # sink cannot COMPUTE them post-staging (files are
-            # immutable), so a stream that omits the column is refused
-            # by the scan erroring on the missing name — fail-shut
-            checks[f"__generated_{name}"] = (
-                f"{name} IS NOT DISTINCT FROM ({expr})"
-            )
-        if checks:
-            try:
-                self._validate_staged(adds, checks)
-            except Exception:
-                self._reclaim(messages)
-                raise
-        commit = {
-            "op": "append",
-            "add": adds,
-            "schema": self.schema_json,
-            "txn_app": self.app,
-            "txn_id": int(batchId),
-        }
-        for _ in range(20):
-            v = t.latest_version() + 1
-            # same rebase discipline as TxLogTable.append: a
-            # concurrent rename/constraint/identity/protocol commit
-            # since the policy snapshot invalidates this batch's
-            # staged file or its validation — fail shut, the stream
-            # restarts the batch against fresh state (ADVICE r6 #2)
-            bad = t._append_policy_conflict(snap["version"], v - 1)
-            if bad is not None:
-                self._reclaim(messages)
-                raise TxConflict(
-                    f"txlog sink: concurrent schema/policy commit "
-                    f"{bad} since the batch's policy snapshot"
-                )
-            if t._try_commit(v, commit):
-                return
+        with _Staging(t) as st:
+            st.adopt(self._tokens(messages))
+            snap = t._snapshot()
             if t.txn_seen(self.app, int(batchId)):
-                self._reclaim(messages)  # a concurrent replay won
+                # replayed batch: the original commit already holds
+                # these rows — no-op (the stage is reclaimed)
                 return
-        self._reclaim(messages)
-        raise TxConflict("txlog sink lost 20 commit races")
+            # rename/drop since STREAM START (not just since this
+            # batch's snapshot): staged files carry the stream-start
+            # physical names, so any epoch bump in the stream's
+            # lifetime means this and every later batch would land
+            # stale names under the new epoch. Incremental scan — each
+            # commit only reads the log suffix it hasn't inspected yet.
+            for i in range(self._rename_checked_upto + 1, snap["version"] + 1):
+                if t._read_commit(i).get("op") == "rename_column":
+                    raise TxConflict(
+                        f"txlog sink: column rename/drop at table version "
+                        f"{i} during the stream's lifetime — the sink's "
+                        "write schema is stale; restart the stream"
+                    )
+            self._rename_checked_upto = snap["version"]
+            if snap.get("identity"):
+                # id assignment needs reservation + a Spark job; the
+                # sink's commit worker has neither — fail shut, point
+                # at the foreachBatch sink (append_batch_txn)
+                raise ValueError(
+                    "txlog sink: table has GENERATED ALWAYS AS IDENTITY "
+                    f"column(s) {sorted(snap['identity'])} — use "
+                    "TxLogTable.write_stream (foreachBatch) for identity "
+                    "tables; this sink cannot assign ids"
+                )
+            checks = dict(snap["constraints"])
+            for name, expr in snap.get("generated", {}).items():
+                # generated columns validate as equality CHECKs here;
+                # the sink cannot COMPUTE them post-staging (files are
+                # immutable), so a stream that omits the column is
+                # refused by the scan erroring on the missing name —
+                # fail-shut
+                checks[f"__generated_{name}"] = (
+                    f"{name} IS NOT DISTINCT FROM ({expr})"
+                )
+            if checks:
+                self._validate_staged(adds, checks)
+            commit = {
+                "op": "append",
+                "add": adds,
+                "schema": self.schema_json,
+                "txn_app": self.app,
+                "txn_id": int(batchId),
+            }
+            # same rebase discipline as TxLogTable.append: a concurrent
+            # rename/constraint/identity/protocol commit since the
+            # policy snapshot invalidates this batch's staged file or
+            # its validation — fail shut, the stream restarts the
+            # batch against fresh state (ADVICE r6 #2)
+            t._commit_or_rebase(
+                snap["version"], commit, "txlog sink",
+                _rebase_over_policy_safe, stage=st,
+                txn=(self.app, int(batchId)),
+            )
 
     def abort(self, messages, batchId: int) -> None:
-        self._reclaim(messages)
+        from aiports_data_warehouse_etl_spark.sources.txlog import (
+            _reclaim_tokens,
+        )
+
+        _reclaim_tokens(self.path, self._tokens(messages))
 
 
 class TxLogSinkSource(DataSource):

@@ -179,43 +179,16 @@ class IncrementalAggView:
                 total += int(base.get(rel, {}).get("bytes", 0))
         return total
 
-    def _fold(
-        self, feed: DataFrame, may_delete: bool = True, with_hi: bool = False
-    ) -> DataFrame:
-        ins = F.col("_change_type") == "insert"
-        sign = (
-            F.when(ins, F.lit(1)).otherwise(F.lit(-1))
-            if may_delete
-            else F.lit(1)
-        )
-        aggs = [F.sum(sign).cast("long").alias("n_rows")]
-        for c in self.sum_cols:
-            aggs.append(F.sum(sign * F.col(c)).alias(f"sum_{c}"))
-        for c in self.min_cols:
-            aggs.append(F.min(F.when(ins, F.col(c))).alias(f"__ins_min_{c}"))
-            if may_delete:
-                aggs.append(
-                    F.min(F.when(~ins, F.col(c))).alias(f"__del_min_{c}")
-                )
-        for c in self.max_cols:
-            aggs.append(F.max(F.when(ins, F.col(c))).alias(f"__ins_max_{c}"))
-            if may_delete:
-                aggs.append(
-                    F.max(F.when(~ins, F.col(c))).alias(f"__del_max_{c}")
-                )
-        if with_hi:
-            aggs.append(F.max("_commit_version").alias("__hi"))
-        return feed.groupBy(*self.group_cols).agg(*aggs)
-
     def refresh(self) -> int | None:
         """Fold source commits (last_applied, latest] into the view.
         Returns the view version written, or None when already
-        current. One pass over the CHANGED rows + a keyed full-outer
-        merge against the (aggregate-cardinality) view state; min/max
-        trigger one additional source scan restricted (broadcast
-        semi-join) to the groups whose stored bound a delete hit —
-        and insert-only slices (decided from the commit log on the
-        driver, no extra job) skip the rescan machinery entirely."""
+        current. ONE keyed aggregation over the union of the CHANGED
+        rows and the (aggregate-cardinality) view state
+        (``_merged_agg``); min/max trigger one additional source scan
+        restricted (broadcast semi-join) to the groups whose stored
+        bound a delete hit — and insert-only slices (decided from the
+        commit log on the driver, no extra job) skip the rescan
+        machinery entirely."""
         last = self.last_applied_version()
         cur = self.source.latest_version()
         if cur <= last:
@@ -301,43 +274,19 @@ class IncrementalAggView:
         may_delete: bool = True,
         pin: bool = False,
     ) -> int | None:
-        """Merge one change-feed slice into the stored view (the
-        shared core of batch refresh and streaming maintenance).
-        ``cur`` is the slice's end version; pass None (streaming) to
-        derive it from the feed itself — the max commit version is
-        folded into the same aggregation and the aggregate-cardinality
-        result is persisted, so the feed is scanned exactly once.
-        ``may_delete=False`` (decided driver-side from the commit log)
-        elides the delete-side bound aggregates and the min/max rescan
-        join from the plan.
-
-        Plan shape (r13, guide §2.4 — share one exchange): the fold
-        of the feed and the merge against the stored view are ONE
-        union + ONE keyed aggregation (`_merged_agg`), not a feed
-        aggregation full-outer-joined to the view — the join's two
-        exchanges and sorts are gone; values are identical (per group
-        each side contributes at most one row, so sum/least/greatest
-        over the union equal the join's coalesce arithmetic).
-        ``SPARK_GRAFT_MV_JOIN_MERGE=1`` restores the r12 join shape
-        (A/B knob)."""
-        import os
-
-        if os.environ.get("SPARK_GRAFT_MV_JOIN_MERGE", "") == "1":
-            deltas = self._fold(feed, may_delete, with_hi=cur is None)
-            if cur is None:
-                deltas = deltas.persist()
-                try:
-                    hi = deltas.agg(F.max("__hi")).collect()[0][0]
-                    if hi is None:
-                        return None  # empty or fully-replayed batch
-                    # deltas is already pinned here, so the merged
-                    # plan's double use re-reads the cache
-                    return self._merge(
-                        deltas.drop("__hi"), int(hi), may_delete
-                    )
-                finally:
-                    deltas.unpersist()
-            return self._merge(deltas, cur, may_delete, pin=pin)
+        """Fold one change-feed slice into the stored view (the
+        shared core of batch refresh and streaming maintenance):
+        ``_merged_agg`` folds the slice and the stored view in one
+        keyed aggregation, ``_finish`` fixes the min/max bounds and
+        commits. ``cur`` is the slice's end version; pass None
+        (streaming) to derive it from the feed itself — the max commit
+        version is folded into the same aggregation and the
+        aggregate-cardinality result is persisted, so the feed is
+        scanned exactly once. ``may_delete=False`` (decided
+        driver-side from the commit log) elides the delete-side bound
+        aggregates and the min/max rescan join from the plan;
+        ``pin`` persists the merged aggregate across the rescan's
+        double use (see ``_PIN_FEED_BYTES``)."""
         merged = self._merged_agg(feed, may_delete, with_hi=cur is None)
         if cur is None:
             merged = merged.persist()
@@ -364,13 +313,15 @@ class IncrementalAggView:
         self, feed: DataFrame, may_delete: bool, with_hi: bool
     ) -> DataFrame:
         """Fold a change-feed slice AND merge it with the stored view
-        in one keyed aggregation over their union (r13). Per group the
-        view contributes at most one row (``__o_*`` columns) and the
-        feed any number of signed rows (``__d_*`` / bound columns);
-        sum / least / greatest over the union reproduce the former
-        full-outer join's coalesce arithmetic exactly. Output schema
-        matches the old ``_merge`` intermediate: group cols, folded
-        n_rows / sums / bounds, ``__rescan`` (+ ``__hi``)."""
+        in one keyed aggregation over their union (r13, guide §2.4 —
+        one exchange, no join). Per group the view contributes at most
+        one row (``__o_*`` columns) and the feed any number of signed
+        rows (``__d_*`` / bound columns). min/max fold insert-only;
+        ``__rescan`` flags groups where a delete ties-or-beats the
+        stored bound (or hits a group the view doesn't carry — only
+        possible on inconsistent feeds, handled conservatively). Output:
+        group cols, folded n_rows / sums / bounds, ``__rescan`` (+
+        ``__hi``)."""
         ins = F.col("_change_type") == "insert"
         sign = (
             F.when(ins, F.lit(1)).otherwise(F.lit(-1))
@@ -447,11 +398,12 @@ class IncrementalAggView:
         self, merged: DataFrame, cur: int, may_delete: bool
     ) -> int | None:
         """Rescan-fix the bound columns of a ``_merged_agg`` result
-        and commit it as the new view state — the tail of the old
-        ``_merge``, unchanged in semantics: groups whose stored bound
-        a delete hit re-derive their min/max from ONE bounded source
-        scan (broadcast semi-join on the affected keys); insert-only
-        slices skip the rescan subplan entirely."""
+        and commit it as the new view state: groups whose stored
+        bound a delete hit re-derive their min/max from ONE bounded
+        source scan (broadcast semi-join on the affected keys; when no
+        bound was hit the build side is empty and the scan prunes to
+        nothing under AQE); insert-only slices skip the rescan subplan
+        entirely."""
         sum_names = [f"sum_{c}" for c in self.sum_cols]
         if may_delete and (self.min_cols or self.max_cols):
             affected = merged.filter(F.col("__rescan")).select(
@@ -489,123 +441,6 @@ class IncrementalAggView:
         # groups whose rows all vanished leave the view entirely
         merged = merged.filter(F.col("n_rows") > 0)
         return self.view.overwrite_batch_txn(merged, self._APP, cur)
-
-    def _merge(
-        self,
-        deltas: DataFrame,
-        cur: int,
-        may_delete: bool,
-        pin: bool = False,
-    ) -> int | None:
-        old = self.view.read()
-        sum_names = [f"sum_{c}" for c in self.sum_cols]
-        o = old.select(
-            *self.group_cols,
-            F.col("n_rows").alias("__o_n"),
-            *[F.col(n).alias(f"__o_{n}") for n in sum_names],
-            *[F.col(n).alias(f"__o_{n}") for n in self._bound_names],
-        )
-        j = o.join(deltas, self.group_cols, "full_outer")
-        cols = [
-            (
-                F.coalesce(F.col("__o_n"), F.lit(0))
-                + F.coalesce(F.col("n_rows"), F.lit(0))
-            )
-            .cast("long")
-            .alias("n_rows")
-        ]
-        for n in sum_names:
-            cols.append(
-                (
-                    F.coalesce(F.col(f"__o_{n}"), F.lit(0.0))
-                    + F.coalesce(F.col(n), F.lit(0.0))
-                ).alias(n)
-            )
-        # min/max: fast-path fold, plus a per-group rescan flag when a
-        # delete ties-or-beats the stored bound (or hits a group the
-        # view doesn't carry — only possible on inconsistent feeds,
-        # handled conservatively by rescanning). Insert-only slices
-        # (may_delete=False) fold bounds purely — no delete columns
-        # exist and no rescan subplan is built.
-        rescan = F.lit(False)
-        for c in self.min_cols:
-            o_min = F.col(f"__o_min_{c}")
-            cols.append(
-                F.least(o_min, F.col(f"__ins_min_{c}")).alias(f"min_{c}")
-            )
-            if may_delete:
-                d_del = F.col(f"__del_min_{c}")
-                rescan = rescan | (
-                    d_del.isNotNull() & (o_min.isNull() | (d_del <= o_min))
-                )
-        for c in self.max_cols:
-            o_max = F.col(f"__o_max_{c}")
-            cols.append(
-                F.greatest(o_max, F.col(f"__ins_max_{c}")).alias(f"max_{c}")
-            )
-            if may_delete:
-                d_del = F.col(f"__del_max_{c}")
-                rescan = rescan | (
-                    d_del.isNotNull() & (o_max.isNull() | (d_del >= o_max))
-                )
-        merged = j.select(*self.group_cols, *cols, rescan.alias("__rescan"))
-        pinned = None
-        if may_delete and (self.min_cols or self.max_cols):
-            # `merged` feeds BOTH the rescan build side (via `affected`)
-            # and the final join probe side; unpersisted, Spark plans
-            # the whole subtree (change-feed fold + full-outer view
-            # merge) twice — no ReusedExchange across that join. When
-            # the slice is big (``pin``, decided driver-side from
-            # commit-log byte stats), pin the aggregate-cardinality
-            # result so the feed is folded exactly once; for small
-            # slices the doubled fold is cheaper than a cache
-            # round-trip.
-            if pin:
-                pinned = merged.persist()
-                merged = pinned
-            affected = merged.filter(F.col("__rescan")).select(
-                *self.group_cols
-            )
-            bound_aggs = [
-                F.min(F.col(c)).alias(f"__re_min_{c}") for c in self.min_cols
-            ] + [
-                F.max(F.col(c)).alias(f"__re_max_{c}") for c in self.max_cols
-            ]
-            # ONE source scan, pre-filtered to affected groups via a
-            # broadcast semi-join (affected ≤ view cardinality); when
-            # no bound was hit this plans an empty build side and the
-            # scan prunes to nothing under AQE
-            rescanned = (
-                self.source.read(version=cur)
-                .join(F.broadcast(affected), self.group_cols, "left_semi")
-                .groupBy(*self.group_cols)
-                .agg(*bound_aggs)
-            )
-            merged = merged.join(rescanned, self.group_cols, "left")
-            fixed = []
-            for c in self.min_cols:
-                fixed.append(
-                    F.when(
-                        F.col("__rescan"), F.col(f"__re_min_{c}")
-                    ).otherwise(F.col(f"min_{c}")).alias(f"min_{c}")
-                )
-            for c in self.max_cols:
-                fixed.append(
-                    F.when(
-                        F.col("__rescan"), F.col(f"__re_max_{c}")
-                    ).otherwise(F.col(f"max_{c}")).alias(f"max_{c}")
-                )
-            keep = ["n_rows", *sum_names]
-            merged = merged.select(*self.group_cols, *keep, *fixed)
-        else:
-            merged = merged.drop("__rescan")
-        # groups whose rows all vanished leave the view entirely
-        merged = merged.filter(F.col("n_rows") > 0)
-        try:
-            return self.view.overwrite_batch_txn(merged, self._APP, cur)
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
 
 
 class IncrementalDistinctView:

@@ -13,10 +13,9 @@
    ride ONE source job; the dup verdict must match groupBy semantics
    exactly (including NULL keys, which count_distinct alone would
    miscount).
-4. matview union-aggregate merge: the r13 single-aggregation refresh
-   must produce bit-identical views to the r12 fold+full-outer-join
-   shape (SPARK_GRAFT_MV_JOIN_MERGE=1) across insert-only, DV-delete
-   and bound-hitting-delete slices.
+4. matview union-aggregate merge: the single-aggregation refresh must
+   equal a pure-Python model of count / sum / min / max per group
+   across insert-only, DV-delete and bound-hitting-delete slices.
 5. Checkpoint schema-ledger compaction (ADVICE r12 #3): checkpoints
    keep only write-schemas that live files reference, remapped; the
    replay resumes correctly from a compacted checkpoint.
@@ -67,12 +66,26 @@ def test_read_plan_memo_is_version_scoped(spark, tmp_path):
     assert t.read(prune={"id": (0, 1)}) is not r1
 
 
-def test_memo_knob_disables(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_TXLOG_MEMO", "1")
-    t = TxLogTable(spark, str(tmp_path / "t"))
-    t.append(spark.range(5))
-    assert t.read() is not t.read()
-    assert t._snapshot() is not t._snapshot()
+def test_no_unlisted_env_knob():
+    """The engine reads exactly these SPARK_GRAFT_* env vars. A new
+    A/B knob must be argued for in review (and listed here); a
+    superseded path goes with its knob."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "aiports_data_warehouse_etl_spark"
+    )
+    found = {
+        name
+        for path in pkg.rglob("*.py")
+        for name in re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text())
+    }
+    assert found == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_LIST_MAX",
+        "SPARK_GRAFT_NO_TD_CACHE",
+    }
 
 
 # -- 2. DV single-pass ------------------------------------------------
@@ -176,49 +189,58 @@ def test_merge_upsert_result_unchanged(spark, tmp_path):
     assert got == want
 
 
-# -- 4. matview union-aggregate == r12 join merge ----------------------
+# -- 4. matview union-aggregate == a pure-Python model ----------------
 
 
-def test_matview_union_agg_equals_join_merge(spark, tmp_path, monkeypatch):
+def _model_view(rows: list[tuple[str, float]]) -> set:
+    """count / sum / min / max of ``v`` per group ``k`` — the view an
+    incremental refresh must always equal."""
+    agg: dict = {}
+    for k, v in rows:
+        n, s, lo, hi = agg.get(k, (0, 0.0, v, v))
+        agg[k] = (n + 1, s + v, min(lo, v), max(hi, v))
+    return {
+        (k, n, round(s, 9), lo, hi) for k, (n, s, lo, hi) in agg.items()
+    }
+
+
+def test_matview_refresh_matches_python_model(spark, tmp_path):
     from aiports_data_warehouse_etl_spark.streaming.matview import (
         IncrementalAggView,
     )
 
-    def run(view_dir: str, join_path: bool) -> set:
-        if join_path:
-            monkeypatch.setenv("SPARK_GRAFT_MV_JOIN_MERGE", "1")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_MV_JOIN_MERGE", raising=False)
-        t = TxLogTable(spark, str(tmp_path / f"src_{join_path}"))
-        mv = IncrementalAggView(
-            spark,
-            t,
-            view_dir,
-            group_cols=["k"],
-            sum_cols=["v"],
-            min_cols=["v"],
-            max_cols=["v"],
-        )
-        rows = [(f"k{i % 3}", float(i)) for i in range(30)]
-        t.append(spark.createDataFrame(rows, "k string, v double"))
-        mv.refresh()                       # initial build
-        t.append(
-            spark.createDataFrame(
-                [("k0", -5.0), ("k3", 7.0)], "k string, v double"
-            )
-        )
-        mv.refresh()                       # insert-only fold
-        t.delete_where_dv("v >= 27.0")     # DV delete hits max bounds
-        t.delete_where("k = 'k0' AND v = -5.0")  # COW delete hits a min
-        mv.refresh()                       # delete fold + rescan
-        return {
+    t = TxLogTable(spark, str(tmp_path / "src"))
+    mv = IncrementalAggView(
+        spark,
+        t,
+        str(tmp_path / "view"),
+        group_cols=["k"],
+        sum_cols=["v"],
+        min_cols=["v"],
+        max_cols=["v"],
+    )
+    live = [(f"k{i % 3}", float(i)) for i in range(30)]
+
+    def refresh_and_check() -> None:
+        mv.refresh()
+        got = {
             (r.k, r.n_rows, round(r.sum_v, 9), r.min_v, r.max_v)
             for r in mv.read().collect()
         }
+        assert got == _model_view(live) and got
 
-    new = run(str(tmp_path / "view_new"), join_path=False)
-    old = run(str(tmp_path / "view_old"), join_path=True)
-    assert new == old and new
+    t.append(spark.createDataFrame(live, "k string, v double"))
+    refresh_and_check()                    # initial build
+    new = [("k0", -5.0), ("k3", 7.0)]
+    t.append(spark.createDataFrame(new, "k string, v double"))
+    live += new
+    refresh_and_check()                    # insert-only fold
+    t.delete_where_dv("v >= 27.0")         # DV delete hits max bounds
+    live = [r for r in live if r[1] < 27.0]
+    refresh_and_check()                    # DV-delete fold + rescan
+    t.delete_where("k = 'k0' AND v = -5.0")  # COW delete hits a min
+    live.remove(("k0", -5.0))
+    refresh_and_check()                    # bound-hitting delete
 
 
 # -- 5. checkpoint ledger compaction -----------------------------------

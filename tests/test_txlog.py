@@ -11,6 +11,7 @@ import json
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from aiports_data_warehouse_etl_spark.sources.txlog import (
@@ -1865,17 +1866,8 @@ def test_matview_minmax_interior_delete_skips_rescan(spark, tbl, tmp_path):
     tbl.delete_where_dv("k = 'a' AND val = 1.0")
     last = mv.last_applied_version()
     cur = tbl.latest_version()
-    deltas = mv._fold(tbl.changes(last, cur))
-    old = mv.view.read().select(
-        "k",
-        F.col("min_val").alias("__o_min_val"),
-        F.col("max_val").alias("__o_max_val"),
-    )
-    j = old.join(deltas, ["k"], "full_outer")
-    hit = j.filter(
-        F.col("__del_min_val").isNotNull()
-        & (F.col("__del_min_val") <= F.col("__o_min_val"))
-    )
+    merged = mv._merged_agg(tbl.changes(last, cur), True, with_hi=False)
+    hit = merged.filter(F.col("__rescan"))
     assert [r.k for r in hit.select("k").collect()] == ["a"]
     mv.refresh()
     assert {
@@ -3984,64 +3976,151 @@ def _staged_tokens(tbl):
     return orphans, markers - committed
 
 
-def test_append_lost_races_reclaims_staging(spark, tbl):
-    """append() exhausting its commit retries must remove the staged
-    data dir AND the _staging marker immediately (the writer knows
-    the stage is dead) instead of leaving them for vacuum's
-    abandoned_seconds window."""
-    tbl.append(_orders(spark).limit(5))
-    orig = tbl._try_commit
-    tbl._try_commit = lambda v, c: False  # always lose the race
-    try:
-        with pytest.raises(TxConflict, match="lost 2 commit races"):
-            tbl.append(_orders(spark).limit(5), max_retries=2)
-    finally:
-        tbl._try_commit = orig
-    orphans, markers = _staged_tokens(tbl)
-    assert orphans == set(), f"staged data leaked: {orphans}"
-    assert markers == set(), f"staging markers leaked: {markers}"
+_ROWS = "id long, v double, g string"
 
 
-def test_append_policy_conflict_reclaims_staging(spark, tbl):
-    """The policy-conflict TxConflict path (concurrent rename since
-    the policy snapshot) reclaims its stage too."""
-    tbl.append(
-        spark.createDataFrame([(1, 1.0)], "id long, v double")
+def _rows(spark, *ids):
+    return spark.createDataFrame(
+        [(i, float(i), "A" if i < 20 else "B") for i in ids], _ROWS
     )
-    other = TxLogTable(spark, tbl.path)
-    orig_stage = tbl._stage
 
-    def stage_then_rename(df):
-        out = orig_stage(df)
-        other.rename_column("v", "v2")  # policy commit lands mid-write
+
+def _after_first_stage(monkeypatch, tbl, action):
+    """Run ``action`` once, right after the write's first ``_stage``."""
+    orig, fired = tbl._stage, []
+
+    def stage(df):
+        out = orig(df)
+        if not fired:
+            fired.append(action())
         return out
 
-    tbl._stage = stage_then_rename
-    try:
-        with pytest.raises(TxConflict, match="schema/policy"):
-            tbl.append(
-                spark.createDataFrame([(2, 2.0)], "id long, v double")
-            )
-    finally:
-        tbl._stage = orig_stage
+    monkeypatch.setattr(tbl, "_stage", stage)
+
+
+def _race_delete(spark, tbl, monkeypatch):
+    """A second instance lands a delete between stage and commit."""
+    other = TxLogTable(spark, tbl.path)
+    _after_first_stage(
+        monkeypatch, tbl, lambda: other.delete_where("id = 39")
+    )
+    return lambda row: row[0] != 39  # the rows the racer leaves
+
+
+def _race_rename(spark, tbl, monkeypatch):
+    """A policy commit (rename) lands between stage and commit."""
+    other = TxLogTable(spark, tbl.path)
+    _after_first_stage(
+        monkeypatch, tbl, lambda: other.rename_column("v", "v2")
+    )
+    return lambda row: True
+
+
+def _lose_races(spark, tbl, monkeypatch):
+    monkeypatch.setattr(tbl, "_try_commit", lambda v, c: False)
+    return lambda row: True
+
+
+def _no_race(spark, tbl, monkeypatch):
+    return lambda row: True
+
+
+#: case -> (arrange the failure, the write, expected error, message)
+_RECLAIM_CASES = {
+    "delete_where": (
+        _race_delete, lambda sp, t: t.delete_where("id < 5"),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "delete_where_dv": (
+        _race_delete, lambda sp, t: t.delete_where_dv("id < 5"),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "update_where": (
+        _race_delete,
+        lambda sp, t: t.update_where("id < 5", {"v": "v + 1"}),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "update_where_mor": (
+        _race_delete,
+        lambda sp, t: t.update_where_mor("id < 5", {"v": "v + 1"}),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "merge_upsert": (
+        _race_delete,
+        lambda sp, t: t.merge_upsert(_rows(sp, 1, 99), keys=["id"]),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "merge": (
+        _race_delete,
+        lambda sp, t: t.merge(
+            _rows(sp, 1).withColumn("v", F.lit(-1.0)), keys=["id"],
+            update_set={"v": "s.v"},
+        ),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "replace_where": (
+        _race_delete,
+        lambda sp, t: t.replace_where(_rows(sp, 3), "g = 'A'"),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "compact": (
+        _race_delete, lambda sp, t: t.compact(),
+        TxConflict, "conflicting concurrent commit",
+    ),
+    "overwrite": (
+        _race_delete, lambda sp, t: t.overwrite(_rows(sp, 7)),
+        TxConflict, "advanced past base snapshot",
+    ),
+    # ADVICE r13 #2: the staged DV must not leak when the SET
+    # expression fails to resolve after the DV stage
+    "update_where_mor_bad_set": (
+        _no_race,
+        lambda sp, t: t.update_where_mor(
+            "id < 5", {"v": "no_such_col + 1"}
+        ),
+        AnalysisException, "no_such_col",
+    ),
+    # append exhausting its commit retries
+    "append_lost_races": (
+        _lose_races,
+        lambda sp, t: t.append(_rows(sp, 50), max_retries=2),
+        TxConflict, "lost 2 commit races",
+    ),
+    # concurrent rename since the append's policy snapshot
+    "append_policy_conflict": (
+        _race_rename, lambda sp, t: t.append(_rows(sp, 50)),
+        TxConflict, "schema/policy",
+    ),
+    "append_batch_txn_lost_races": (
+        _lose_races,
+        lambda sp, t: t.append_batch_txn(
+            _rows(sp, 50), "app", 1, max_retries=2
+        ),
+        TxConflict, "lost 2 commit races",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RECLAIM_CASES))
+def test_staging_write_reclaims(spark, tbl, monkeypatch, case):
+    """Every staging write that raises — a commit race it may not
+    rebase over, exhausted retries, a bad expression after a stage —
+    removes its staged data dirs AND ``_staging`` markers before it
+    returns (the writer knows the stage is dead; nothing waits for
+    vacuum's abandoned_seconds), and the table shows no trace of it."""
+    arrange, write, exc, match = _RECLAIM_CASES[case]
+    tbl.append(_rows(spark, *range(20)))
+    tbl.append(_rows(spark, *range(20, 40)))
+    pre = {tuple(r) for r in tbl.read().collect()}
+    survives = arrange(spark, tbl, monkeypatch)
+    with pytest.raises(exc, match=match):
+        write(spark, tbl)
+    monkeypatch.undo()
     orphans, markers = _staged_tokens(tbl)
     assert orphans == set(), f"staged data leaked: {orphans}"
     assert markers == set(), f"staging markers leaked: {markers}"
-
-
-def test_append_batch_txn_conflict_reclaims_staging(spark, tbl):
-    tbl.append(_orders(spark).limit(5))
-    orig = tbl._try_commit
-    tbl._try_commit = lambda v, c: False
-    try:
-        with pytest.raises(TxConflict, match="lost 2 commit races"):
-            tbl.append_batch_txn(
-                _orders(spark).limit(5), "app", 1, max_retries=2
-            )
-    finally:
-        tbl._try_commit = orig
-    orphans, markers = _staged_tokens(tbl)
-    assert orphans == set() and markers == set()
+    got = {tuple(r) for r in tbl.read().collect()}
+    assert got == {r for r in pre if survives(r)}
 
 
 def test_vacuum_reaps_orphaned_log_tmp(spark, tbl):

@@ -3,7 +3,7 @@
 Usage: python tools/ab_conf.py '<json conf overrides>' <query ...>
 
 Override keys beginning with ``env:`` set process ENV VARS in the
-child instead of Spark conf (e.g. ``env:SPARK_GRAFT_NO_TD_REPART``).
+child instead of Spark conf (e.g. ``env:SPARK_GRAFT_NO_TD_CACHE``).
 
 ABBA design (first measurement lesson of r12: a base-then-override
 pair credits the override with the OS page-cache warmth the base run
