@@ -96,10 +96,11 @@ def build_fact_flights(
         date_key, "date_id_fk",
     )
 
-    # delay_id_fk = row position in canonical input order (ref `:314`;
-    # the documented mismatch vs deduped delay_id_pk — SURVEY §2.11.9 —
-    # is reproduced in "reference" mode and fixed in strict mode by
-    # joining the deduped dim back on the delay values in the pipeline).
+    # delay_id_fk = row position in canonical input order, in both
+    # modes (ref `:314`). dim_delays keys each distinct delay tuple by
+    # the position of its first row, so a flight that repeats an earlier
+    # tuple points at no dim_delays row (SURVEY §2.11.9); nothing joins
+    # the deduped dim back.
     df = with_row_id(df, flight_canonical_order(flights), "delay_id_fk")
 
     arr_time = F.coalesce(F.col("ARR_TIME"), F.lit(0)).cast("long")

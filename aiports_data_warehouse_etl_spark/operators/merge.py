@@ -28,7 +28,11 @@ import operator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aiports_data_warehouse_etl_spark.sources.io import read_parquet, write_parquet
+from aiports_data_warehouse_etl_spark.sources.io import (
+    hadoop_path,
+    read_parquet,
+    write_parquet,
+)
 
 
 def anti_join_all_columns(new: DataFrame, existing: DataFrame) -> DataFrame:
@@ -52,7 +56,8 @@ def delta_merge(
     read the target (a corrupt footer, a permission error) propagates,
     leaving the target as it was.
     """
-    if not _path_exists(spark, target_path):
+    fs, hpath = hadoop_path(spark, target_path)
+    if not fs.exists(hpath):
         write_parquet(new_df, target_path, mode="overwrite")
         write_parquet(new_df, delta_path, mode="overwrite")
         return new_df
@@ -66,15 +71,6 @@ def delta_merge(
     delta_back = spark.read.schema(delta.schema).parquet(delta_path)
     write_parquet(delta_back, target_path, mode="append")
     return delta_back
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop ``FileSystem.exists`` under the session's conf, so any
-    scheme the session can read (file, hdfs, s3a, ...) works."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    return hpath.getFileSystem(conf).exists(hpath)
 
 
 def keyed_upsert(new_df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:

@@ -38,6 +38,13 @@ DEFAULT_CONF = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Quieter, faster local runs; harmless on a cluster.
     "spark.ui.showConsoleProgress": "false",
+    # Generated-class cache (static: read once per JVM). A cold plus an
+    # incremental run_pipeline needs 145 classes (115 cold, 30 more
+    # incremental; measured with CodegenMetrics on the perfbench
+    # etl_nightly inputs), over the default of 100, so every run
+    # Janino-compiled about 100 classes again. At 1000 a steady-state
+    # run compiles none.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

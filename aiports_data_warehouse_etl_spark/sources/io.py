@@ -35,6 +35,15 @@ def read_csv(
     return reader.csv(path)
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop
+    conf, so any scheme the session can read (file, hdfs, s3a, ...)
+    works."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return hpath.getFileSystem(conf), hpath
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (S4). Schema comes from the footer — already typed."""
     return spark.read.parquet(path)

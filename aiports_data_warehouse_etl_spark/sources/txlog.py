@@ -42,6 +42,7 @@ import json
 import re
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -63,6 +64,10 @@ _LOG_DIR = "_txlog"
 _STAGING_DIR = "_staging"  # in-flight writer intent markers (see _Staging)
 _BLOOM_DIR = "_bloom"  # bloom-bitmap sidecar files (see _externalize_blooms)
 _VERSION_WIDTH = 20
+#: Serializes ``_driver_side_listing``'s set and restore of a
+#: session-global conf, so threads sharing a session cannot leave it
+#: raised.
+_LISTING_CONF_LOCK = threading.Lock()
 
 #: Commit ops a STAGED BLIND APPEND may rebase over: none of these
 #: change the column-naming epoch, the write policy (CHECK /
@@ -1808,18 +1813,21 @@ class TxLogTable:
         driver-side at 1,000 files. Bounded: beyond
         ``SPARK_GRAFT_DRIVER_LIST_MAX`` (default 16384) paths the
         distributed listing is kept (sequential driver stats on a
-        high-latency object store would lose at that scale)."""
+        high-latency object store would lose at that scale). The conf
+        is session-global, so the raise is held under
+        ``_LISTING_CONF_LOCK``: other raising readers wait for it."""
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
         cap = int(os.environ.get("SPARK_GRAFT_DRIVER_LIST_MAX", "16384"))
         if n_paths <= 32 or n_paths > cap:
             yield
             return
-        old = self.spark.conf.get(key, "32")
-        self.spark.conf.set(key, str(n_paths))
-        try:
-            yield
-        finally:
-            self.spark.conf.set(key, old)
+        with _LISTING_CONF_LOCK:
+            old = self.spark.conf.get(key, "32")
+            self.spark.conf.set(key, str(n_paths))
+            try:
+                yield
+            finally:
+                self.spark.conf.set(key, old)
 
     def _read_with_dvs(
         self,
@@ -2161,6 +2169,11 @@ class TxLogTable:
         src = self._apply_generated(
             source, base["generated"], "merge_upsert"
         )
+        if base["version"] < 0 or not base["files"]:
+            # nothing to prune: the duplicate-key check alone, no
+            # key-range aggregate (append runs the CHECK pass)
+            self._require_unique_keys(src, keys, "merge_upsert")
+            return self.append(src)
         pre = self._merge_preflight(
             src,
             keys,
@@ -2168,8 +2181,6 @@ class TxLogTable:
             "merge_upsert",
         )
         self._validate_constraints(src, base["constraints"])
-        if base["version"] < 0 or not base["files"]:
-            return self.append(src)
         # DV-aware lineage scan (rows deleted by a deletion vector are
         # not merge targets and must not survive into rewrites); the
         # lineage columns come from _metadata ON the scan, before the
@@ -2270,12 +2281,6 @@ class TxLogTable:
                 "their ids; NOT MATCHED inserts get fresh ones)"
             )
         source = self._apply_generated(source, base["generated"], "merge")
-        pre = self._merge_preflight(
-            source,
-            keys,
-            [k for k in keys if k in self._skippable_cols(base)],
-            "merge",
-        )
 
         def _cond(sql: str | None, default: bool) -> Column:
             # NULL-valued MERGE conditions never fire their clause
@@ -2284,6 +2289,9 @@ class TxLogTable:
             return F.coalesce(F.expr(sql), F.lit(False))
 
         if base["version"] < 0 or not base["files"]:
+            # nothing to prune: the duplicate-key check alone, no
+            # key-range aggregate
+            self._require_unique_keys(source, keys, "merge")
             if not insert:
                 return base["version"]
             new_rows = source.alias("s").filter(_cond(insert_condition, True))
@@ -2291,6 +2299,12 @@ class TxLogTable:
                 return base["version"]
             return self.append(new_rows)
 
+        pre = self._merge_preflight(
+            source,
+            keys,
+            [k for k in keys if k in self._skippable_cols(base)],
+            "merge",
+        )
         tgt = self._lineage_read(
             base, self._key_candidates(base, source, keys, pre=pre)
         )

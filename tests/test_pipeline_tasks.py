@@ -1,8 +1,9 @@
 """``run_pipeline`` as concurrent per-table tasks, on inline CSVs of a
 few rows each (no reference data needed): curated tables and ``_new``
 twins against the builders' direct output, determinism across runs,
-job-free reports, task failures, a pinned job count, and the
-``delta_merge`` first-load guard."""
+job-free reports, task failures, a pinned job count, the
+``delta_merge`` first-load guard, the fingerprint skip of unchanged
+lookup tables, and a re-run that compiles no generated class."""
 
 from __future__ import annotations
 
@@ -310,3 +311,128 @@ def test_delta_merge_never_overwrites_an_unreadable_target(spark, tmp_path):
     with pytest.raises(Exception):
         delta_merge(spark, spark.range(1), target, twin)
     assert _files(target) == before
+
+
+LOOKUPS = ["dim_airports", "dim_air_carriers", "dim_time"]
+
+
+def _spy_merges(monkeypatch) -> list[str]:
+    """Names of the tables ``run_pipeline`` delta-merges from now on,
+    i.e. the tables that take the full path."""
+    merged = []
+    real = pipeline.delta_merge
+
+    def merge(spark, df, target, delta):
+        merged.append(os.path.basename(target).split(".")[0])
+        return real(spark, df, target, delta)
+
+    monkeypatch.setattr(pipeline, "delta_merge", merge)
+    return merged
+
+
+def _fingerprint_file(out: str, name: str) -> str:
+    return f"{out}/{name}.parquet/{pipeline.FINGERPRINT_FILE}"
+
+
+def _outcome(spark, out: str, res) -> dict:
+    """Targets, twins, reports and ``tables`` of the lookup tables."""
+    return {
+        name: (
+            [(df.columns, _rows(df)) for df in (
+                spark.read.parquet(f"{out}/{name}.parquet"),
+                spark.read.parquet(f"{out}/{name}_new.parquet"),
+                res.tables[name],
+            )],
+            sorted(map(tuple, res.reports[name].collect())),
+        )
+        for name in LOOKUPS
+    }
+
+
+def test_rerun_with_unchanged_lookups_skips_them(spark, inputs, tmp_path, monkeypatch):
+    skipped, full = str(tmp_path / "skipped"), str(tmp_path / "full")
+    _run(spark, inputs, None, skipped)
+    _run(spark, inputs, None, full)
+    for name in LOOKUPS:
+        os.remove(_fingerprint_file(full, name))
+    merged = _spy_merges(monkeypatch)
+
+    with _job_group(spark, "pipeline-skip-rerun") as jobs:
+        res = _run(spark, inputs, None, skipped)
+    assert merged == []
+    assert len(jobs) <= len(LOOKUPS)  # one empty-twin write per table
+
+    want = _outcome(spark, full, _run(spark, inputs, None, full))
+    assert sorted(merged) == sorted(LOOKUPS)
+    got = _outcome(spark, skipped, res)
+    assert got == want
+    for name in LOOKUPS:
+        (target, twin, table), _ = got[name]
+        assert twin == (target[0], Counter()), name
+        assert table == target, name
+
+
+def test_edited_airports_row_rebuilds_only_dim_airports(spark, tmp_path, monkeypatch):
+    inputs = _write_inputs(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    _run(spark, inputs, inputs.flights_base, out)
+    edited = [(c, d.replace("B Intl", "B International Airport")) for c, d in AIRPORTS]
+    _write_csv(inputs.airports, _names(schemas.AIRPORTS_RAW), edited)
+    merged = _spy_merges(monkeypatch)
+    flights_derived = set(TABLES) - set(LOOKUPS)
+
+    res = _run(spark, inputs, inputs.flights_incremental, out)
+    assert set(merged) == flights_derived | {"dim_airports"}
+    # the target keeps the old row beside the edited one
+    names = [r.name for r in spark.read.parquet(f"{out}/dim_airports.parquet").collect()]
+    assert sorted(n for n in names if n.startswith("B ")) == ["B International Airport", "B Intl"]
+    direct = _direct_build(spark, inputs, inputs.flights_incremental)
+    assert _rows(res.tables["fact_flights"]) == _rows(direct["fact_flights"])
+
+    # unchanged again: dim_airports skips, and the fact still joins the
+    # builder's rows, not the two-row target
+    merged.clear()
+    res = _run(spark, inputs, inputs.flights_incremental, out)
+    assert set(merged) == flights_derived
+    assert _rows(res.tables["dim_airports"]) == _rows(direct["dim_airports"])
+    assert _rows(res.tables["fact_flights"]) == _rows(direct["fact_flights"])
+
+
+@pytest.mark.parametrize("change", ["missing_sidecar", "rule_set", "builder_version"])
+def test_fingerprint_miss_forces_full_path(spark, inputs, tmp_path, monkeypatch, change):
+    out = str(tmp_path / "out")
+    _run(spark, inputs, None, out)
+    if change == "missing_sidecar":
+        os.remove(_fingerprint_file(out, "dim_air_carriers"))
+        want = ["dim_air_carriers"]
+    elif change == "rule_set":
+        monkeypatch.setitem(pipeline.RULES, "dim_time", lambda: V.dim_time_rules()[:-1])
+        want = ["dim_time"]
+    else:
+        monkeypatch.setattr(pipeline, "BUILDER_VERSION", pipeline.BUILDER_VERSION + 1)
+        want = LOOKUPS
+    merged = _spy_merges(monkeypatch)
+    res = _run(spark, inputs, None, out)
+    assert sorted(merged) == sorted(want)
+    # the stored report follows the rule set in force
+    rules = {r.rule_name for r in res.reports["dim_time"].collect()}
+    assert rules == {r.name for r in pipeline.RULES["dim_time"]()}
+    merged.clear()
+    _run(spark, inputs, None, out)
+    assert merged == []
+
+
+def _compiled_classes(spark) -> int:
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_steady_state_run_compiles_no_generated_class(spark, inputs, tmp_path):
+    def cold_then_incremental(out):
+        _run(spark, inputs, inputs.flights_base, out)
+        _run(spark, inputs, inputs.flights_incremental, out)
+
+    cold_then_incremental(str(tmp_path / "warm"))
+    before = _compiled_classes(spark)
+    cold_then_incremental(str(tmp_path / "steady"))
+    assert _compiled_classes(spark) == before

@@ -15,6 +15,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from aiports_data_warehouse_etl_spark.sources.txlog import (
+    ConstraintViolation,
     TxConflict,
     TxLogTable,
     _version_path,
@@ -713,6 +714,66 @@ def test_merge_upsert_on_empty_table_is_append(spark, tbl):
     src = spark.createDataFrame([(1, "x")], "id int, s string")
     tbl.merge_upsert(src, keys=["id"])
     assert tbl.read().count() == 1
+
+
+@pytest.mark.parametrize("verb", ["merge_upsert", "merge"])
+def test_first_merge_into_empty_table_skips_key_ranges(spark, tbl, monkeypatch, verb):
+    """An empty target has no file to prune, so the first merge runs
+    no min/max key-range aggregate; duplicate source keys and CHECK
+    violations still fail."""
+    def key_ranges(*args, **kwargs):
+        raise AssertionError("key-range aggregate on an empty table")
+
+    monkeypatch.setattr(TxLogTable, "_merge_preflight", key_ranges)
+    monkeypatch.setattr(TxLogTable, "_key_candidates", key_ranges)
+    tbl.add_check("id_positive", "id > 0")
+
+    def run(rows):
+        src = spark.createDataFrame(rows, "id int, s string")
+        if verb == "merge_upsert":
+            return tbl.merge_upsert(src, keys=["id"])
+        return tbl.merge(src, keys=["id"], update_set={"s": "s.s"})
+
+    with pytest.raises(ValueError, match="multiple rows for key"):
+        run([(1, "x"), (1, "y"), (2, "z")])
+    with pytest.raises(ConstraintViolation):
+        run([(0, "x")])
+    assert not tbl._snapshot()["files"]
+    run([(1, "x"), (2, "z")])
+    assert sorted(map(tuple, tbl.read().collect())) == [(1, "x"), (2, "z")]
+
+
+def test_driver_side_listing_is_thread_safe(spark, tmp_path):
+    """Threads sharing a session each read a table of more than 32
+    files; each read raises and restores the session's listing
+    threshold, which must end where it started."""
+    import threading
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    path = str(tmp_path / "wide")
+    TxLogTable(spark, path).append(spark.range(400).repartition(40))
+    before = spark.conf.get(key, "32")
+    assert len(TxLogTable(spark, path)._snapshot()["files"]) > 32
+    sums, errors = [], []
+
+    def reader():
+        try:
+            for _ in range(3):
+                # a fresh instance per read: no read memo, so every
+                # read lists the table's files
+                row = TxLogTable(spark, path).read().agg(F.count("id"), F.sum("id")).first()
+                sums.append(tuple(row))
+        except BaseException as exc:  # surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert errors == []
+    assert sums == [(400, sum(range(400)))] * 12
+    assert spark.conf.get(key, "32") == before
 
 
 def test_merge_upsert_additive_schema_evolution(spark, tbl):

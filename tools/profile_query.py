@@ -7,7 +7,11 @@ bench way (fn(spark, sf_dir).count()), and prints a table of every
 Spark action with its wall time and call site — the measurement §1 of
 the optimization guide asks for on latency-bound queries, where the
 question is "how many sequential jobs, and which line pays for each"
-rather than "which stage is slow".
+rather than "which stage is slow". Each action also shows how many
+generated classes Janino compiled during it (Spark's
+``CodegenMetrics.METRIC_COMPILATION_TIME`` count, JVM-wide, so executor
+compiles count too in local mode), and each rep its total: the compile
+layer, without a profiler.
 
 Usage: python tools/profile_query.py <query_name> [sf_dir] [reps]
 """
@@ -23,8 +27,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aiports_data_warehouse_etl_spark.queries import QUERIES  # noqa: E402
 from aiports_data_warehouse_etl_spark.session import get_spark  # noqa: E402
 
-ACTIONS: list[tuple[float, str, str]] = []
+ACTIONS: list[tuple[float, str, str, int]] = []
 _DEPTH = 0  # suppress nested re-entry (collect inside collect)
+
+
+def _compiled() -> int:
+    """Generated classes compiled in this JVM so far."""
+    from pyspark import SparkContext
+
+    metrics = SparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _site() -> str:
@@ -48,13 +60,15 @@ def _wrap(cls, name):
         if _DEPTH:
             return orig(self, *a, **kw)
         _DEPTH += 1
+        compiled = _compiled()
         t0 = time.perf_counter()
         try:
             return orig(self, *a, **kw)
         finally:
+            dur = time.perf_counter() - t0
             _DEPTH -= 1
             ACTIONS.append(
-                (time.perf_counter() - t0, f"{cls.__name__}.{name}", _site())
+                (dur, f"{cls.__name__}.{name}", _site(), _compiled() - compiled)
             )
 
     setattr(cls, name, timed)
@@ -88,15 +102,18 @@ def main() -> None:
 
     for rep in range(reps):
         ACTIONS.clear()
+        compiled = _compiled()
         t0 = time.perf_counter()
         QUERIES[name].fn(spark, sf_dir).count()
         total = time.perf_counter() - t0
+        compiled = _compiled() - compiled
         spark.catalog.clearCache()
         print(f"\n=== {name} rep {rep}: {total:.3f}s total, "
               f"{len(ACTIONS)} actions, "
-              f"{sum(a[0] for a in ACTIONS):.3f}s in actions ===")
-        for dur, kind, site in ACTIONS:
-            print(f"  {dur:7.3f}s  {kind:28s}  {site}")
+              f"{sum(a[0] for a in ACTIONS):.3f}s in actions, "
+              f"{compiled} classes compiled ===")
+        for dur, kind, site, n in ACTIONS:
+            print(f"  {dur:7.3f}s  {n:4d} compiled  {kind:28s}  {site}")
 
 
 if __name__ == "__main__":
