@@ -2,12 +2,16 @@
 inputs and compare EXACTLY against the curated CSVs the reference
 committed (SURVEY.md §5 item 2).
 
-airports / air_carriers / time goldens are fully reproducible (inputs
-present); date / delay / flights goldens depend on the missing
+airports / air_carriers / time goldens need the reference checkout
+(its rawdata/ lookups and curated/*.csv, at RAW and CURATED below);
+where a file a test reads is absent, that test skips and names the
+missing path. date / delay / flights goldens depend on the missing
 nationwide blob and are covered by synthetic-fixture tests instead.
 """
 
 from __future__ import annotations
+
+import os
 
 import pandas as pd
 import pytest
@@ -24,11 +28,18 @@ CURATED = "/root/reference/curated"
 RAW = "/root/reference/rawdata"
 
 
+def needs(*paths):
+    """Skip unless every reference file the test reads exists."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(bool(missing), reason=f"reference file missing: {', '.join(missing)}")
+
+
 def as_pandas_sorted(df, by):
     pdf = df.toPandas().sort_values(by).reset_index(drop=True)
     return pdf
 
 
+@needs(f"{RAW}/Airports", f"{CURATED}/airports_transformed_data.csv")
 def test_dim_airports_matches_golden(spark):
     raw = read_csv(spark, f"{RAW}/Airports", schemas.AIRPORTS_RAW)
     ours = as_pandas_sorted(build_dim_airports(raw), "airport_id_pk")
@@ -42,6 +53,7 @@ def test_dim_airports_matches_golden(spark):
     )
 
 
+@needs(f"{RAW}/Air Carriers", f"{CURATED}/air_carriers_transformed_data.csv")
 def test_dim_air_carriers_matches_golden(spark):
     raw = read_csv(spark, f"{RAW}/Air Carriers", schemas.AIR_CARRIERS_RAW)
     ours = as_pandas_sorted(build_dim_air_carriers(raw), "air_carrier_id_pk")
@@ -54,6 +66,7 @@ def test_dim_air_carriers_matches_golden(spark):
     pd.testing.assert_frame_equal(ours, golden)
 
 
+@needs(f"{CURATED}/time_transformed_data.csv")
 def test_dim_time_matches_golden(spark):
     ours = as_pandas_sorted(build_dim_time(spark), "time_id_pk")
     golden = pd.read_csv(f"{CURATED}/time_transformed_data.csv").sort_values(

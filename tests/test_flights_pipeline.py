@@ -148,8 +148,12 @@ def test_validation_catches_corruption(spark):
 
 def test_full_pipeline_incremental_csv(spark, tmp_path):
     """End-to-end: synthetic flights CSV → full star schema written with
-    delta twins; a second run with MORE data appends only the delta."""
+    delta twins; a second run with MORE data appends only the delta.
+    The airports and carriers lookups are the reference's raw files where
+    they exist, else two-row inline CSVs holding the codes the flights
+    use."""
     import csv as _csv
+    import os
 
     from aiports_data_warehouse_etl_spark.plans import run_pipeline
 
@@ -157,20 +161,31 @@ def test_full_pipeline_incremental_csv(spark, tmp_path):
     r1 = [_flight(0, "2018-08-01", "AAA", "BBB"), _flight(1, "2018-08-02", "BBB", "AAA")]
     r2 = r1 + [_flight(2, "2018-08-03", "AAA", "BBB", carrier_delay=9.0)]
 
-    def write_csv(path, rows):
+    def write_csv(path, rows, head=header):
         with open(path, "w", newline="") as fh:
             w = _csv.writer(fh)
-            w.writerow(header)
+            w.writerow(head)
             w.writerows(rows)
 
     flights_csv = str(tmp_path / "flights.csv")
     out = str(tmp_path / "curated")
     write_csv(flights_csv, r1)
 
+    airports_csv = "/root/reference/rawdata/Airports"
+    carriers_csv = "/root/reference/rawdata/Air Carriers"
+    if not (os.path.exists(airports_csv) and os.path.exists(carriers_csv)):
+        airports_csv = str(tmp_path / "airports.csv")
+        carriers_csv = str(tmp_path / "carriers.csv")
+        lookup = ["Code", "Description"]
+        write_csv(
+            airports_csv, [("AAA", "A City, AK: A Field"), ("BBB", "B City, NY: B Intl")], lookup
+        )
+        write_csv(carriers_csv, [(19031, "Carrier One: C1"), (19032, "Carrier Two: C2")], lookup)
+
     res1 = run_pipeline(
         spark,
-        airports_csv="/root/reference/rawdata/Airports",
-        carriers_csv="/root/reference/rawdata/Air Carriers",
+        airports_csv=airports_csv,
+        carriers_csv=carriers_csv,
         flights_csv=flights_csv,
         out_root=out,
         mode="strict",
@@ -187,8 +202,8 @@ def test_full_pipeline_incremental_csv(spark, tmp_path):
     write_csv(flights_csv, r2)
     run_pipeline(
         spark,
-        airports_csv="/root/reference/rawdata/Airports",
-        carriers_csv="/root/reference/rawdata/Air Carriers",
+        airports_csv=airports_csv,
+        carriers_csv=carriers_csv,
         flights_csv=flights_csv,
         out_root=out,
         mode="strict",
