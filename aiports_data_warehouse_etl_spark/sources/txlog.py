@@ -33,15 +33,20 @@ written and fsync'd before the name appears); on an object store the
 same protocol runs on a putIfAbsent / DynamoDB-style log-commit
 primitive (content-atomic by construction) — the log format is
 transport-agnostic.
+
+The on-disk format (log, checkpoint and staging-marker files) and the
+fold of commits into table state live in `txlog_log.py`, which needs
+no Spark; this module is the Spark side: staging data, the DML verbs,
+reads and vacuum.
 """
 
 from __future__ import annotations
 
 import contextlib
+import copy
 import json
 import re
 import os
-import shutil
 import threading
 import time
 import uuid
@@ -49,6 +54,13 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from aiports_data_warehouse_etl_spark.sources import txlog_log
+# the log's file names, under the names the tests import
+from aiports_data_warehouse_etl_spark.sources.txlog_log import (  # noqa: F401
+    checkpoint_path as _checkpoint_path,
+    version_path as _version_path,
+)
 
 
 class TxConflict(RuntimeError):
@@ -60,10 +72,7 @@ class ConstraintViolation(ValueError):
     """A write would insert rows that fail a CHECK constraint."""
 
 
-_LOG_DIR = "_txlog"
-_STAGING_DIR = "_staging"  # in-flight writer intent markers (see _Staging)
 _BLOOM_DIR = "_bloom"  # bloom-bitmap sidecar files (see _externalize_blooms)
-_VERSION_WIDTH = 20
 #: Serializes ``_driver_side_listing``'s set and restore of a
 #: session-global conf, so threads sharing a session cannot leave it
 #: raised.
@@ -117,32 +126,6 @@ def _rebase_over_policy_safe(ivs: list[tuple[int, dict]]) -> str | None:
     return None
 
 
-def _write_marker(table_path: str, token: str) -> None:
-    """Land the ``_staging/<token>`` intent marker — BEFORE any of the
-    token's data is written (the protocol ``vacuum`` relies on)."""
-    os.makedirs(os.path.join(table_path, _STAGING_DIR), exist_ok=True)
-    with open(os.path.join(table_path, _STAGING_DIR, token), "w") as fh:
-        json.dump({"token": token, "ts": time.time_ns()}, fh)
-
-
-def _reclaim_tokens(table_path: str, tokens) -> None:
-    """Remove staged tokens: their ``data/<token>`` dirs and markers."""
-    for token in tokens:
-        shutil.rmtree(
-            os.path.join(table_path, "data", token), ignore_errors=True
-        )
-        with contextlib.suppress(OSError):
-            os.remove(os.path.join(table_path, _STAGING_DIR, token))
-
-
-def _staged_tokens_of(commit: dict) -> set[str]:
-    """Staging tokens a commit references (its adds and DV file)."""
-    rels = [a["path"] for a in commit.get("add", [])]
-    if commit.get("dv_file"):
-        rels.append(commit["dv_file"])
-    return {r.split(os.sep)[1] for r in rels if not os.path.isabs(r)}
-
-
 class _Staging:
     """The one owner of a write's staged files. Every ``TxLogTable``
     write — and the native streaming sink (``txlog_sink.py``) — stages
@@ -174,7 +157,7 @@ class _Staging:
 
     def stage(self, df: DataFrame) -> tuple[list[dict], str]:
         adds, schema = self.table._stage(df)
-        self.adopt(a["path"].split(os.sep)[1] for a in adds)
+        self.adopt(txlog_log.staged_tokens({"add": adds}))
         return adds, schema
 
     def adopt(self, tokens) -> None:
@@ -188,20 +171,10 @@ class _Staging:
         keep: set[str] = set()
         if self.trying is not None:
             with contextlib.suppress(OSError, ValueError):
-                keep = _staged_tokens_of(self.table._read_commit(self.trying))
-        _reclaim_tokens(self.table.path, self.tokens - keep)
-
-
-def _version_path(table_path: str, version: int) -> str:
-    return os.path.join(
-        table_path, _LOG_DIR, f"{version:0{_VERSION_WIDTH}d}.json"
-    )
-
-
-def _checkpoint_path(table_path: str, version: int) -> str:
-    return os.path.join(
-        table_path, _LOG_DIR, f"{version:0{_VERSION_WIDTH}d}.checkpoint.json"
-    )
+                keep = txlog_log.staged_tokens(
+                    self.table._read_commit(self.trying)
+                )
+        txlog_log.reclaim_tokens(self.table.path, self.tokens - keep)
 
 
 #: Max stored length for STRING min/max stats (Delta's dataSkipping
@@ -334,239 +307,39 @@ class TxLogTable:
         # version and scoped to THIS instance (a table re-created at
         # the same path is a new instance), so concurrent writers are
         # seen the moment latest_version() returns a new head. All
-        # consumers treat these as read-only (audited r13; the one
-        # forward-folding consumer, changes(), copies what it
-        # mutates).
+        # consumers treat these as read-only; the forward-folding
+        # consumers (changes(), the CDF planner) fold a copy, and
+        # txlog_log.replay copies what it takes from a commit.
         self._commit_memo: dict[int, dict] = {}
         self._snap_memo: dict[int, dict] = {}
         self._read_memo: dict[int, DataFrame] = {}
-        os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
+        os.makedirs(os.path.join(path, txlog_log.LOG_DIR), exist_ok=True)
 
     # -- log plumbing ---------------------------------------------------
 
     def latest_version(self) -> int:
         """Highest committed version, -1 for an empty table."""
-        best = -1
-        for name in os.listdir(os.path.join(self.path, _LOG_DIR)):
-            if name.endswith(".json") and not name.endswith(".checkpoint.json"):
-                best = max(best, int(name.split(".")[0]))
-        return best
+        return txlog_log.latest_version(self.path)
 
     def _read_commit(self, version: int) -> dict:
         c = self._commit_memo.get(version)
         if c is None:
-            with open(_version_path(self.path, version)) as fh:
-                c = json.load(fh)
+            c = txlog_log.read_commit(self.path, version)
             self._commit_memo[version] = c
         return c
 
     def _snapshot(self, version: int | None = None) -> dict:
-        """Resolve live files at ``version`` (default: latest).
-
-        Replays from the newest checkpoint ≤ version; each commit's
-        ``remove`` drops files, ``add`` introduces them. Returns
-        {"version", "schema", "files": {rel_path: stats}}.
-        """
+        """Table state at ``version`` (default: latest), folded by
+        ``txlog_log.state_at`` from the newest checkpoint ≤ version:
+        {"version", "schema", "files": {rel_path: stats}, "dvs", ...}
+        (the keys of ``txlog_log.empty_state``)."""
         head = self.latest_version() if version is None else version
         if head < 0:
-            return {
-                "version": -1,
-                "schema": None,
-                "files": {},
-                "dvs": {},
-                "constraints": {},
-                "bloom_cols": {},
-                "blooms": {},
-                "generated": {},
-                "identity": {},
-                "renames": [],
-                "file_epoch": {},
-                "schemas": [],
-                "file_schema": {},
-                "protocol": {"min_reader": 1, "min_writer": 1},
-            }
+            return txlog_log.empty_state()
         memo_hit = self._snap_memo.get(head)
         if memo_hit is not None:
             return memo_hit
-        start = 0
-        state: dict = {
-            "schema": None,
-            "files": {},
-            "dvs": {},
-            "constraints": {},
-            "bloom_cols": {},
-            "blooms": {},
-            "generated": {},
-            "identity": {},
-            "renames": [],
-            "file_epoch": {},
-            "schemas": [],
-            "file_schema": {},
-            "protocol": {"min_reader": 1, "min_writer": 1},
-        }
-        for v in range(head, -1, -1):
-            cp = _checkpoint_path(self.path, v)
-            if os.path.exists(cp):
-                with open(cp) as fh:
-                    state = json.load(fh)
-                state.setdefault("dvs", {})  # pre-DV checkpoints
-                state.setdefault("constraints", {})
-                state.setdefault("bloom_cols", {})
-                state.setdefault("blooms", {})
-                state.setdefault("generated", {})
-                state.setdefault("identity", {})
-                state.setdefault("renames", [])
-                state.setdefault("file_epoch", {})
-                # pre-r12 checkpoints carry no per-file write schemas:
-                # files restored from them read via the mergeSchema
-                # fallback (sid None), never a wrong explicit schema
-                state.setdefault("schemas", [])
-                state.setdefault("file_schema", {})
-                state.setdefault(
-                    "protocol", {"min_reader": 1, "min_writer": 1}
-                )
-                start = v + 1
-                break
-        for v in range(start, head + 1):
-            commit = self._read_commit(v)
-            if commit.get("schema"):
-                state["schema"] = commit["schema"]
-            if commit.get("op") == "set_constraint":
-                state["constraints"][commit["name"]] = commit["check"]
-            elif commit.get("op") == "drop_constraint":
-                state["constraints"].pop(commit["name"], None)
-            elif commit.get("op") == "set_generated":
-                state["generated"][commit["name"]] = commit["expr"]
-            elif commit.get("op") == "drop_generated":
-                state["generated"].pop(commit["name"], None)
-            elif commit.get("op") == "set_identity":
-                state["identity"][commit["name"]] = {
-                    "step": int(commit["step"]),
-                    "next": int(commit["next"]),
-                }
-            elif commit.get("op") == "drop_identity":
-                state["identity"].pop(commit["name"], None)
-            elif commit.get("op") == "reserve_identity":
-                ident = state["identity"].get(commit["name"])
-                if ident is not None:
-                    ident["next"] = max(
-                        int(ident["next"]), int(commit["upto"])
-                    )
-            elif commit.get("op") == "rename_column":
-                state["renames"] = state["renames"] + [
-                    [commit["old"], commit["new"]]
-                ]
-            for rel in commit.get("remove", []):
-                state["files"].pop(rel, None)
-                state["file_epoch"].pop(rel, None)
-                state["file_schema"].pop(rel, None)
-                # a removed (rewritten/compacted) file takes its
-                # deletion vectors and bloom filters with it — the
-                # rewrite already applied / re-derives them
-                state["dvs"].pop(rel, None)
-                for filt in state["blooms"].values():
-                    filt.pop(rel, None)
-            # Per-file WRITE schema (r12, read-path fast path): a
-            # commit's staged files all share one physical schema —
-            # "add_schema" (set from _stage's actual df schema by the
-            # rewrite ops), or "schema" for append/overwrite, the two
-            # ops whose commit schema IS the staged schema by
-            # construction (merge-family commits record the BASE
-            # schema there, which may differ from the staged files in
-            # nullability — never trusted here). restore/clone re-add
-            # files written across MANY earlier commits; they carry
-            # an explicit per-file "file_schemas" map instead. Files
-            # whose write schema is unknown (pre-r12 logs) get sid
-            # None → the reader falls back to mergeSchema, never to
-            # a guessed schema.
-            _adds = commit.get("add", [])
-            if _adds:
-                # per-file map wins (restore/clone re-adds,
-                # replace_where's two staged sets); the commit-wide
-                # fallback only applies outside restore/clone (their
-                # re-added files were written across many commits)
-                _per_file = commit.get("file_schemas", {})
-                _asch = (
-                    None
-                    if commit.get("op") in ("restore", "clone")
-                    else commit.get("add_schema")
-                    or (
-                        commit.get("schema")
-                        if commit.get("op") in ("append", "overwrite")
-                        else None
-                    )
-                )
-
-                def _sid(sch: str | None) -> int | None:
-                    if not sch:
-                        return None
-                    try:
-                        return state["schemas"].index(sch)
-                    except ValueError:
-                        state["schemas"].append(sch)
-                        return len(state["schemas"]) - 1
-
-                for add in _adds:
-                    state["file_schema"][add["path"]] = _sid(
-                        _per_file.get(add["path"]) or _asch
-                    )
-            for add in commit.get("add", []):
-                state["files"][add["path"]] = add["stats"]
-                # a file's rename EPOCH records which renames had
-                # already happened when it was written (its physical
-                # column names); restore/clone re-adds carry explicit
-                # epochs because their files predate the current head
-                state["file_epoch"][add["path"]] = commit.get(
-                    "epochs", {}
-                ).get(add["path"], len(state["renames"]))
-            if commit.get("dv_targets"):
-                # any commit may carry a deletion vector (delete_dv,
-                # update_mor — the MoR UPDATE pairs a DV with adds)
-                for data_rel, n in commit["dv_targets"].items():
-                    state["dvs"].setdefault(data_rel, []).append(
-                        {"file": commit["dv_file"], "rows": int(n)}
-                    )
-            if commit.get("op") == "set_protocol":
-                state["protocol"] = {
-                    "min_reader": int(commit["min_reader"]),
-                    "min_writer": int(commit["min_writer"]),
-                }
-            if commit.get("op") in ("restore", "clone"):
-                # RESTORE/CLONE carry a complete DV mapping —
-                # replacement, not fold: DVs added since the restore
-                # point die, (re-)added files get theirs back. The
-                # RENAMES state replaces the same way (a restore to a
-                # pre-rename version reverts the logical schema, so
-                # the mapping must revert with it; file epochs in the
-                # commit's "epochs" index into THIS list).
-                state["dvs"] = {
-                    k: list(v) for k, v in commit["dvs"].items()
-                }
-                if "renames" in commit:
-                    state["renames"] = [
-                        list(r) for r in commit["renames"]
-                    ]
-            if commit.get("op") == "clone":
-                # a clone inherits the source's table policy
-                state["constraints"] = dict(commit.get("constraints", {}))
-                state["bloom_cols"] = dict(commit.get("bloom_cols", {}))
-                state["generated"] = dict(commit.get("generated", {}))
-                state["identity"] = {
-                    k: dict(v)
-                    for k, v in commit.get("identity", {}).items()
-                }
-            if commit.get("op") == "bloom_index":
-                state["bloom_cols"][commit["col"]] = {"fpp": commit["fpp"]}
-                state["blooms"].setdefault(commit["col"], {}).update(
-                    commit["filters"]
-                )
-            elif commit.get("op") == "drop_bloom_index":
-                state["bloom_cols"].pop(commit["col"], None)
-                state["blooms"].pop(commit["col"], None)
-            # auto-maintained per-file blooms riding a write commit
-            for col_, filt in commit.get("blooms", {}).items():
-                state["blooms"].setdefault(col_, {}).update(filt)
-        out = {"version": head, **state}
+        out = txlog_log.state_at(self.path, head, self._read_commit)
         # bounded: vacuum/time-travel sweeps walk many versions — keep
         # the newest handful, which is what refresh/commit loops
         # re-resolve
@@ -575,17 +348,42 @@ class TxLogTable:
         self._snap_memo[head] = out
         return out
 
+    def _maintain_blooms(self, commit: dict) -> None:
+        """Bloom auto-maintenance: when the table has registered bloom
+        columns, a commit that adds data files gets per-file filters
+        computed here (from the already-staged parquet) and embedded
+        in the commit — so appends, rewrites, MERGE and compaction
+        keep the index complete with no caller changes. A commit that
+        already carries ``blooms`` (restore, clone) keeps them.
+
+        ``self.spark`` is None on the native streaming sink's commit
+        path (Python worker, no JVM handle): no filters there — a
+        file absent from a bloom index is conservatively KEPT by
+        read(prune_eq=...), so correctness is unaffected; the next
+        add_bloom_index/compact back-fills."""
+        if not commit.get("add") or "blooms" in commit or not self.spark:
+            return
+        try:
+            bloom_cols = self._snapshot()["bloom_cols"]
+        except (OSError, ValueError):
+            return
+        add_stats = {a["path"]: a["stats"] for a in commit["add"]}
+        add_sch = txlog_log.add_write_schema(commit)
+        blooms: dict = {}
+        for col, params in bloom_cols.items():
+            filt = self._build_blooms(
+                add_stats, col, float(params["fpp"]), sch_of=add_sch
+            )
+            if filt:
+                blooms[col] = filt
+        if blooms:
+            commit["blooms"] = self._externalize_blooms(blooms)
+
     def _try_commit(self, version: int, commit: dict) -> bool:
         """ONE atomic create — the whole concurrency story. Returns
-        False when another writer took this version number.
-
-        Bloom auto-maintenance: when the table has registered bloom
-        columns, every commit that adds data files gets per-file
-        filters computed here (from the already-staged parquet) and
-        embedded in the commit — so appends, rewrites, MERGE and
-        compaction keep the index complete with no caller changes.
-        Memoized in the commit dict: a rebase-retry re-commits the
-        same staged files without recomputing."""
+        False when another writer took this version number. Pure log
+        I/O: every Spark-side part of the commit is already in
+        ``commit``."""
         # Writer protocol gate (Delta-style versioning): a table
         # whose min_writer exceeds what this code supports must be
         # REFUSED, never half-written — the forward-compat contract
@@ -604,44 +402,6 @@ class TxLogTable:
                     f"{self.SUPPORTED_WRITER} — upgrade the engine, "
                     "not the table"
                 )
-        # self.spark is None on the native streaming sink's commit
-        # path (Python worker, no JVM handle): skip bloom
-        # auto-maintenance there — a file absent from a bloom index is
-        # conservatively KEPT by read(prune_eq=...), so correctness is
-        # unaffected; the next add_bloom_index/compact back-fills.
-        if commit.get("add") and "blooms" not in commit and self.spark:
-            try:
-                bloom_cols = self._snapshot()["bloom_cols"]
-            except (OSError, ValueError):
-                bloom_cols = {}
-            if bloom_cols:
-                blooms: dict = {}
-                add_stats = {
-                    a["path"]: a["stats"] for a in commit["add"]
-                }
-                _csch = commit.get("add_schema") or (
-                    commit.get("schema")
-                    if commit.get("op") in ("append", "overwrite")
-                    else None
-                )
-                add_sch = (
-                    {p: commit.get("file_schemas", {}).get(p) or _csch
-                     for p in add_stats}
-                    if commit.get("op") not in ("restore", "clone")
-                    else {
-                        p: commit.get("file_schemas", {}).get(p)
-                        for p in add_stats
-                    }
-                )
-                for col, params in bloom_cols.items():
-                    filt = self._build_blooms(
-                        add_stats, col, float(params["fpp"]),
-                        sch_of=add_sch,
-                    )
-                    if filt:
-                        blooms[col] = filt
-                if blooms:
-                    commit["blooms"] = self._externalize_blooms(blooms)
         # Commit timestamps are STRICTLY monotone by construction
         # (Delta-style clamp: never below predecessor+1 ns, one small
         # predecessor read — v-1 always exists before anyone targets
@@ -656,102 +416,37 @@ class TxLogTable:
             except (OSError, ValueError, KeyError):
                 pass  # unreadable predecessor: raw clock stamp
         payload = json.dumps(commit, sort_keys=True).encode()
-        # Two-step atomic create: write the FULL payload to a private
-        # tmp file (fsync'd), then hard-link it to the version path.
-        # link(2) fails with EEXIST when another writer holds the slot
-        # — the same putIfAbsent semantics as O_CREAT|O_EXCL — but the
-        # version file now appears with complete content, never empty.
-        # (The earlier O_EXCL-on-final-name protocol made the file
-        # VISIBLE at create time and wrote the JSON after; a concurrent
-        # reader could open the claimed-but-unwritten file and crash on
-        # empty/partial JSON — caught by the multiprocess stress test
-        # under load. Object-store conditional-put is content-atomic by
-        # construction; this makes the local protocol match.)
-        final = _version_path(self.path, version)
-        tmp = final + f".tmp.{uuid.uuid4().hex}"
-        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
         try:
-            os.write(fd, payload)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            return False
+            if not txlog_log.put_if_absent(
+                txlog_log.version_path(self.path, version), payload
+            ):
+                return False
         except FileNotFoundError:
             # A concurrent vacuum(abandoned_seconds=...) reaped our
             # tmp file between create and link — only possible when
             # this writer stalled longer than the caller's abandonment
             # horizon. Surface it LOUDLY as a conflict (the state read
             # is that stale too), never as a bare FileNotFoundError
-            # masked by the cleanup below (ADVICE r8 #2). No staged-
-            # file reclaim needed: any parquet this writer staged was
-            # created BEFORE the tmp, so it is older than the same
-            # abandonment horizon and the same vacuum reaps it.
+            # (ADVICE r8 #2). No staged-file reclaim needed: any
+            # parquet this writer staged was created BEFORE the tmp,
+            # so it is older than the same abandonment horizon and the
+            # same vacuum reaps it.
             raise TxConflict(
                 f"commit v{version}: staging file reaped by vacuum "
                 f"(writer exceeded the abandoned-file horizon); "
                 f"re-read table state and retry"
             ) from None
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(tmp)
         if version > 0 and version % self.checkpoint_every == 0:
-            snap = self._snapshot(version)
-            # Compact the write-schema ledger on checkpoint (ADVICE
-            # r12 #3): the in-replay `schemas` list only ever grows —
-            # one-off rewrite variants linger after their files are
-            # gone. Keep only sids a live file references and remap;
-            # the replay resumes from the compacted list with
-            # identical semantics (sids are internal to one state).
-            used = sorted(
-                {
-                    sid
-                    for sid in snap["file_schema"].values()
-                    if sid is not None
-                }
+            txlog_log.write_checkpoint(
+                self.path, self._snapshot(version),
+                self._committed_tokens(version),
             )
-            remap = {sid: i for i, sid in enumerate(used)}
-            cp = {
-                "schema": snap["schema"],
-                "files": snap["files"],
-                "dvs": snap["dvs"],
-                "constraints": snap["constraints"],
-                "bloom_cols": snap["bloom_cols"],
-                "blooms": snap["blooms"],
-                "generated": snap["generated"],
-                "identity": snap["identity"],
-                "renames": snap["renames"],
-                "file_epoch": snap["file_epoch"],
-                "schemas": [snap["schemas"][sid] for sid in used],
-                "file_schema": {
-                    rel: (remap[sid] if sid is not None else None)
-                    for rel, sid in snap["file_schema"].items()
-                },
-                "protocol": snap["protocol"],
-                # cumulative staged-token ledger so vacuum resolves
-                # committed tokens in O(commits since checkpoint)
-                "tokens": sorted(self._committed_tokens(version)),
-            }
-            tmp = _checkpoint_path(self.path, version) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(cp, fh, sort_keys=True)
-            os.replace(tmp, _checkpoint_path(self.path, version))
         # commit landed: the staged files are now log-referenced, so
         # their intent markers are done (best-effort — vacuum also
         # reaps markers whose token appears in the log)
-        staged = [add["path"] for add in commit.get("add", [])]
-        if commit.get("dv_file"):
-            staged.append(commit["dv_file"])
-        for rel in staged:
-            if os.path.isabs(rel):
-                continue  # external ref (clone): no local staging marker
-            token = rel.split(os.sep)[1]
-            try:
+        for token in txlog_log.staged_tokens(commit):
+            with contextlib.suppress(OSError):
                 os.remove(self._marker_path(token))
-            except OSError:
-                pass
         return True
 
     # -- staging --------------------------------------------------------
@@ -818,6 +513,9 @@ class TxLogTable:
         evolved the table's (the newer write wins — a rebase must
         never silently narrow an additive evolution), while an
         append's schema is its files' write schema and stays."""
+        # the write's Spark work ends here, once: every retry below
+        # re-commits the same staged files with the same filters
+        self._maintain_blooms(commit)
         st = stage or _Staging(self)
         v = base_version + 1
         for _ in range(max_retries):
@@ -847,7 +545,7 @@ class TxLogTable:
         raise TxConflict(f"{op} lost {max_retries} commit races")
 
     def _marker_path(self, token: str) -> str:
-        return os.path.join(self.path, _STAGING_DIR, token)
+        return txlog_log.marker_path(self.path, token)
 
     def _rewrite_width(self, hit_rel: list[str], base: dict) -> int:
         """File count for a copy-on-write REWRITE: proportional to the
@@ -1154,7 +852,7 @@ class TxLogTable:
         marker is removed when the commit referencing the token lands
         (or reaped by vacuum once the token shows up in the log)."""
         token = uuid.uuid4().hex
-        _write_marker(self.path, token)
+        txlog_log.write_marker(self.path, token)
         rel_dir = os.path.join("data", token)
         abs_dir = os.path.join(self.path, rel_dir)
         adds = []
@@ -1168,7 +866,7 @@ class TxLogTable:
                     {"path": rel, "stats": _file_stats(os.path.join(self.path, rel))}
                 )
         except BaseException:
-            _reclaim_tokens(self.path, [token])
+            txlog_log.reclaim_tokens(self.path, [token])
             raise
         return adds, df.schema.json()
 
@@ -1834,10 +1532,8 @@ class TxLogTable:
         rel_files: list[str],
         dvs: dict,
         keep_lineage: bool = False,
-        snap: dict | None = None,
-        renames: list | None = None,
-        epochs: dict | None = None,
-        sch_of: dict | None = None,
+        *,
+        snap: dict,
     ) -> DataFrame:
         """Read the given data files with their deletion vectors
         applied (anti-join on (file, row position) — AQE broadcasts
@@ -1848,9 +1544,9 @@ class TxLogTable:
         ``_metadata`` hidden columns, captured ON THE SCAN before any
         join (input_file_name() is single-source only).
 
-        Column-rename mapping: pass ``snap`` (or explicit ``renames``
-        + per-file ``epochs``) and files written before a RENAME
-        COLUMN are scanned in per-epoch groups, renamed to the
+        ``snap`` is the table state the files are read under. Files
+        written before a RENAME COLUMN (per its per-file rename
+        epochs) are scanned in per-epoch groups, renamed to the
         CURRENT logical names on the scan, and unioned by name — a
         rename is metadata-only, no file rewrites. The common case
         (no renames, or every file current) stays the single
@@ -1858,10 +1554,9 @@ class TxLogTable:
 
         Schema fast path (r12, guide §1/§6 — no job for what the log
         already knows): when every file in an epoch group shares one
-        KNOWN write schema (``sch_of``: rel → schema JSON, derived
-        from the snapshot's per-file ledger or passed by ``changes``),
-        that schema is given to the reader explicitly — the
-        mergeSchema footer-merge JOB (one distributed pass over every
+        KNOWN write schema (the state's per-file ledger), that schema
+        is given to the reader explicitly — the mergeSchema
+        footer-merge JOB (one distributed pass over every
         file's footer, per read) disappears, and so does the driver's
         blocking wait on it. Groups containing any unknown-schema
         file (pre-r12 logs, restore re-adds) or mixed schemas
@@ -1870,24 +1565,14 @@ class TxLogTable:
         (missing columns null-fill the same way under an explicit
         schema as under mergeSchema; pinned by
         test_schema_evolution_across_appends)."""
-        if snap is not None:
-            renames = snap.get("renames") or []
-            epochs = snap.get("file_epoch") or {}
-            if sch_of is None:
-                _sids = snap.get("file_schema") or {}
-                _schemas = snap.get("schemas") or []
-                sch_of = {
-                    rel: (_schemas[sid] if sid is not None else None)
-                    for rel, sid in _sids.items()
-                }
-        renames = renames or []
-        epochs = epochs or {}
-        sch_of = sch_of or {}
+        renames = snap["renames"]
+        epochs = snap["file_epoch"]
+        sch_of = txlog_log.file_schemas(snap, rel_files)
         if not rel_files:
             # data-skipping DML can prune EVERY candidate file (r11:
             # _predicate_candidates) — the caller's "no hits → no-op"
             # path still needs a correctly-shaped empty frame
-            if snap is None or not snap.get("schema"):
+            if not snap["schema"]:
                 raise ValueError(
                     "_read_with_dvs: empty file list without a snapshot "
                     "schema to shape the empty result"
@@ -2830,12 +2515,12 @@ class TxLogTable:
             # files were written across many commits — no single
             # commit-wide schema is sound for them)
             "file_schemas": {
-                a["path"]: old["schemas"][old["file_schema"][a["path"]]]
-                for a in adds
-                if old["file_schema"].get(a["path"]) is not None
+                rel: sch
+                for rel, sch in txlog_log.file_schemas(old, re_added).items()
+                if sch is not None
             },
-            # memoized (possibly empty) so _try_commit never recomputes
-            # filters for files whose restored blooms we already carry
+            # present (possibly empty) so no filters are recomputed
+            # for files whose restored blooms we already carry
             "blooms": blooms,
             "base_version": base["version"],
         }
@@ -2899,9 +2584,11 @@ class TxLogTable:
                 for rel in snap["files"]
             },
             "file_schemas": {
-                _abs(rel): snap["schemas"][snap["file_schema"][rel]]
-                for rel in snap["files"]
-                if snap["file_schema"].get(rel) is not None
+                _abs(rel): sch
+                for rel, sch in txlog_log.file_schemas(
+                    snap, snap["files"]
+                ).items()
+                if sch is not None
             },
             # sidecar refs absolutize like file paths: the clone has
             # no _bloom/ dir of its own until it writes one (a later
@@ -3183,8 +2870,8 @@ class TxLogTable:
         """Register a BLOOM-FILTER FILE INDEX on ``col``: per-file
         bitmaps land in the log for every current file, and from this
         commit on every write path (append, COW rewrite, MERGE,
-        compact) auto-computes filters for its new files inside
-        ``_try_commit`` — the index never goes stale. Point-lookup
+        compact) auto-computes filters for its new files before its
+        first commit attempt — the index never goes stale. Point-lookup
         reads (``read(prune_eq={col: v})``) then skip files whose
         filter proves absence, which is the lever min/max stats can't
         provide for HIGH-CARDINALITY UNCLUSTERED columns (a uniform
@@ -3216,12 +2903,7 @@ class TxLogTable:
         filters = self._externalize_blooms(
             {col: self._build_blooms(
                 base["files"], col, fpp,
-                sch_of={
-                    rel: (
-                        base["schemas"][sid] if sid is not None else None
-                    )
-                    for rel, sid in base["file_schema"].items()
-                },
+                sch_of=txlog_log.file_schemas(base, base["files"]),
             )}
         ).get(col, {})
         commit = {
@@ -3396,198 +3078,101 @@ class TxLogTable:
         active at v-1 and filters the delete side of every remove
         through it, keeping the feed net-exact (fold(changes) ==
         table state, pinned by test_change_feed_dv_then_cow_folds)."""
-        # DV state active BEFORE the commit being scanned (i.e. at
-        # v-1), seeded from the snapshot at from_version and folded
-        # forward with the same transitions as _snapshot().
-        seed = (
-            None if from_version < 0 else self._snapshot(from_version)
-        )
-        dvs: dict = (
-            {}
-            if seed is None
-            else {k: list(e) for k, e in seed["dvs"].items()}
-        )
-        # rename state folds forward the same way: rn = the renames
-        # list active at v-1, fe = per-file epoch into THAT list, so
-        # every emission reads a file under its correct logical names
-        rn: list = [] if seed is None else [list(r) for r in seed["renames"]]
-        fe: dict = {} if seed is None else dict(seed["file_epoch"])
-        # per-file write schema folds forward too (rel → schema JSON
-        # or None) so every emission can take the explicit-schema read
-        # fast path — see _read_with_dvs
-        sch_of: dict = (
-            {}
-            if seed is None
-            else {
-                rel: (
-                    seed["schemas"][sid] if sid is not None else None
-                )
-                for rel, sid in seed["file_schema"].items()
-            }
+        # table state BEFORE the commit being scanned (i.e. at v-1): a
+        # copy of the snapshot at from_version, folded forward with
+        # txlog_log.replay once each commit's delete side is planned
+        state = (
+            copy.deepcopy(self._snapshot(from_version))
+            if from_version >= 0
+            else txlog_log.empty_state()
         )
 
-        def _commit_sch(c: dict) -> str | None:
-            if c.get("op") in ("restore", "clone"):
-                return None  # per-file via file_schemas
-            return c.get("add_schema") or (
-                c.get("schema")
-                if c.get("op") in ("append", "overwrite")
-                else None
+        def require(v: int, rels: list[str]) -> None:
+            # an incomplete feed must be LOUD, never a silent hole:
+            # vacuum already reclaimed these files
+            gone = [
+                rel for rel in rels
+                if not os.path.exists(os.path.join(self.path, rel))
+            ]
+            if gone:
+                raise ValueError(
+                    f"changes({from_version}, {to_version}): commit "
+                    f"{v}'s files were vacuumed ({len(gone)} missing, "
+                    f"e.g. {os.path.basename(gone[0])}) — the feed "
+                    "cannot be reconstructed past the retention window"
+                )
+
+        def tag(frame: DataFrame, kind: str, v: int) -> DataFrame:
+            return frame.withColumn("_change_type", F.lit(kind)).withColumn(
+                "_commit_version", F.lit(v).cast("long")
             )
 
         frames = []
         for v in range(from_version + 1, to_version + 1):
             c = self._read_commit(v)
-            if c.get("op") == "compact":
-                # pure layout: no row changes — but the rewrite applied
-                # and dropped the removed files' DVs, so fold the state
-                for rel in c.get("remove", []):
-                    dvs.pop(rel, None)
-                    fe.pop(rel, None)
-                    sch_of.pop(rel, None)
-                for add in c.get("add", []):
-                    fe[add["path"]] = len(rn)
-                    sch_of[add["path"]] = _commit_sch(c)
-                continue
-            if c.get("op") == "rename_column":
-                # metadata-only: no rows change; the feed keeps
-                # emitting under each commit's then-current names
-                rn = rn + [[c["old"], c["new"]]]
+            if c.get("op") in ("compact", "rename_column"):
+                # no row changes: compact is pure layout (its rewrite
+                # applied the removed files' DVs); a rename is
+                # metadata-only, and the feed keeps emitting under
+                # each commit's then-current names
+                txlog_log.replay(state, c)
                 continue
             if c.get("dv_targets"):
                 # merge-on-read commit (delete_dv, update_mor): the
                 # deleted rows are the data rows the DV addresses — a
                 # semi-join on the row address reconstructs them
                 # exactly. update_mor ALSO adds files (the updated
-                # copies); those fall through to the generic insert
-                # emission below.
-                dv_abs = os.path.join(self.path, c["dv_file"])
+                # copies); those take the generic insert side below.
                 targets = sorted(c["dv_targets"])
-                gone = [
-                    p
-                    for p in [dv_abs]
-                    + [os.path.join(self.path, t) for t in targets]
-                    if not os.path.exists(p)
-                ]
-                if gone:
-                    raise ValueError(
-                        f"changes({from_version}, {to_version}): commit "
-                        f"{v}'s files were vacuumed ({len(gone)} missing) "
-                        "— the feed cannot be reconstructed past the "
-                        "retention window"
-                    )
+                require(v, [c["dv_file"], *targets])
                 data = self._read_with_dvs(
-                    targets, {}, keep_lineage=True, renames=rn, epochs=fe,
-                    sch_of=sch_of,
+                    targets, {}, keep_lineage=True, snap=state
                 )
-                data_cols = self._data_cols(data)
                 dv = self.spark.read.schema(
                     "file_rel string, row_index bigint"
-                ).parquet(dv_abs).select(
+                ).parquet(os.path.join(self.path, c["dv_file"])).select(
                     F.col("file_rel").alias("__file_rel"),
                     F.col("row_index").alias("__row_index"),
                 )
                 deleted = data.join(
                     dv, ["__file_rel", "__row_index"], "left_semi"
-                ).select(*data_cols)
-                frames.append((
-                    deleted.withColumn("_change_type", F.lit("delete"))
-                    .withColumn("_commit_version", F.lit(v).cast("long")),
-                    len(rn),
-                ))
-                for data_rel, n in c["dv_targets"].items():
-                    dvs.setdefault(data_rel, []).append(
-                        {"file": c["dv_file"], "rows": int(n)}
-                    )
-                if c.get("op") == "delete_dv":
-                    continue  # pure MoR delete: nothing added
-            # a RESTORE's re-added files come back with their restored
-            # deletion vectors — the insert side must exclude rows
-            # those DVs address, or the feed over-emits vs the state
-            ins_dvs: dict = (
-                c["dvs"] if c.get("op") in ("restore", "clone") else {}
-            )
-            for kind, rels in (
-                ("insert", [a["path"] for a in c.get("add", [])]),
-                ("delete", list(c.get("remove", []))),
-            ):
-                paths = [os.path.join(self.path, rel) for rel in rels]
-                if kind == "delete":
-                    # the DV files needed to suppress already-deleted
-                    # rows must also still be on disk
-                    paths = paths + [
-                        os.path.join(self.path, e["file"])
-                        for rel in rels
-                        for e in dvs.get(rel, [])
-                    ]
-                else:
-                    paths = paths + [
-                        os.path.join(self.path, e["file"])
-                        for rel in rels
-                        for e in ins_dvs.get(rel, [])
-                    ]
-                gone = [p for p in paths if not os.path.exists(p)]
-                if gone:
-                    # an incomplete feed must be LOUD, never a silent
-                    # hole: vacuum already reclaimed these files
-                    raise ValueError(
-                        f"changes({from_version}, {to_version}): commit "
-                        f"{v}'s files were vacuumed ({len(gone)} missing, "
-                        f"e.g. {os.path.basename(gone[0])}) — the feed "
-                        "cannot be reconstructed past the retention window"
-                    )
-                if not rels:
-                    continue
-                if kind == "delete":
-                    # exclude rows a DV active at v-1 already deleted
-                    frame = self._read_with_dvs(
-                        rels, dvs, renames=rn, epochs=fe, sch_of=sch_of
-                    )
-                else:
-                    # ins_dvs is {} except for restore commits, where
-                    # _read_with_dvs degrades to the plain read anyway
-                    ins_rn = (
-                        [list(r) for r in c["renames"]]
-                        if c.get("op") in ("restore", "clone")
-                        and "renames" in c
-                        else rn
-                    )
-                    ins_fe = {
-                        rel: c.get("epochs", {}).get(rel, len(ins_rn))
-                        for rel in rels
-                    }
-                    _c_sch = _commit_sch(c)
-                    ins_sch = {
-                        rel: c.get("file_schemas", {}).get(rel) or _c_sch
-                        for rel in rels
-                    }
-                    frame = self._read_with_dvs(
-                        rels, ins_dvs, renames=ins_rn, epochs=ins_fe,
-                        sch_of=ins_sch,
-                    )
-                frames.append((
-                    frame.withColumn("_change_type", F.lit(kind))
-                    .withColumn("_commit_version", F.lit(v).cast("long")),
-                    len(ins_rn) if kind == "insert" else len(rn),
-                ))
-            for rel in c.get("remove", []):
-                # the rewrite applied the removed files' DVs
-                dvs.pop(rel, None)
-                fe.pop(rel, None)
-                sch_of.pop(rel, None)
-            if c.get("op") in ("restore", "clone") and "renames" in c:
-                rn = [list(r) for r in c["renames"]]
-            _c_sch = _commit_sch(c)
-            for add in c.get("add", []):
-                fe[add["path"]] = c.get("epochs", {}).get(
-                    add["path"], len(rn)
+                ).select(*self._data_cols(data))
+                frames.append(
+                    (tag(deleted, "delete", v), len(state["renames"]))
                 )
-                sch_of[add["path"]] = (
-                    c.get("file_schemas", {}).get(add["path"]) or _c_sch
+            # the delete side excludes rows a DV active at v-1 already
+            # emitted as deleted, so those DV files must still exist
+            removed = list(c.get("remove", []))
+            require(v, removed + [
+                e["file"] for rel in removed
+                for e in state["dvs"].get(rel, [])
+            ])
+            if removed:
+                del_frame = tag(
+                    self._read_with_dvs(removed, state["dvs"], snap=state),
+                    "delete", v,
                 )
-            if c.get("op") in ("restore", "clone"):
-                # fold state follows the snapshot's replacement rule
-                dvs = {k: list(e) for k, e in c["dvs"].items()}
+                del_rn = len(state["renames"])
+            txlog_log.replay(state, c)
+            # the insert side reads under the state AFTER the commit:
+            # its write schemas and rename epochs, and for a RESTORE
+            # the restored renames and deletion vectors (the re-added
+            # files come back without the rows those DVs address)
+            added = [a["path"] for a in c.get("add", [])]
+            require(v, added + [
+                e["file"] for rel in added
+                for e in state["dvs"].get(rel, [])
+            ])
+            if added:
+                frames.append((
+                    tag(
+                        self._read_with_dvs(added, state["dvs"], snap=state),
+                        "insert", v,
+                    ),
+                    len(state["renames"]),
+                ))
+            if removed:
+                frames.append((del_frame, del_rn))
         if not frames:
             snap = self._snapshot(to_version)
             if snap["schema"] is None:
@@ -3603,7 +3188,7 @@ class TxLogTable:
         # crossing a RESTORE that reverts renames keeps commit-time
         # names for the reverted span — the restore replaced the
         # mapping wholesale, so no forward chain exists.)
-        final_rn = self._snapshot(to_version)["renames"]
+        final_rn = state["renames"]
         lifted = []
         for f, k in frames:
             for old_c, new_c in final_rn[min(k, len(final_rn)):]:
@@ -3753,24 +3338,14 @@ class TxLogTable:
         O(total history) (ADVICE r4). Checkpoints written before the
         token ledger existed fall back to one full scan; the next
         checkpoint write repairs them."""
-        tokens: set[str] = set()
-        start = 0
-        for v in range(upto, -1, -1):
-            cp = _checkpoint_path(self.path, v)
-            if not os.path.exists(cp):
-                continue
-            with open(cp) as fh:
-                state = json.load(fh)
-            if "tokens" in state:
-                tokens = set(state["tokens"])
-                start = v + 1
-            break  # newest checkpoint decides (tokens are cumulative)
+        cp = txlog_log.newest_checkpoint(self.path, upto)
+        # the newest checkpoint decides (its ledger is cumulative)
+        if cp is not None and "tokens" in cp:
+            tokens, start = set(cp["tokens"]), cp["version"] + 1
+        else:
+            tokens, start = set(), 0
         for v in range(start, upto + 1):
-            c = self._read_commit(v)
-            for add in c.get("add", []):
-                tokens.add(add["path"].split(os.sep)[1])
-            if c.get("dv_file"):
-                tokens.add(c["dv_file"].split(os.sep)[1])
+            tokens |= txlog_log.staged_tokens(self._read_commit(v))
         return tokens
 
     def vacuum(
@@ -3822,7 +3397,7 @@ class TxLogTable:
         now = time.time()
         # -- staging markers: reap committed/abandoned, honor live --
         in_flight: set[str] = set()
-        staging_root = os.path.join(self.path, _STAGING_DIR)
+        staging_root = os.path.join(self.path, txlog_log.STAGING_DIR)
         committed_tokens: set[str] = set()
         if os.path.isdir(staging_root):
             committed_tokens = self._committed_tokens(self.latest_version())
@@ -3845,24 +3420,10 @@ class TxLogTable:
                         pass
                 else:
                     in_flight.add(token)
-        # -- orphaned commit tmp files (ADVICE r7): a writer crashing
-        # between creating <version>.json.tmp.<uuid> and the
-        # link/remove pair leaves the tmp file forever — readers
-        # ignore it (name doesn't end with .json) but nothing else
-        # ever deletes it. A tmp older than abandoned_seconds can
-        # belong to no in-flight commit (commits hold the tmp only
-        # for one write+link), so it is reaped here.
-        log_root = os.path.join(self.path, _LOG_DIR)
-        if os.path.isdir(log_root):
-            for name in sorted(os.listdir(log_root)):
-                if ".tmp." not in name:
-                    continue
-                tmp = os.path.join(log_root, name)
-                try:
-                    if now - os.path.getmtime(tmp) >= abandoned_seconds:
-                        os.remove(tmp)
-                except OSError:
-                    pass  # raced with the writer or a parallel vacuum
+        # -- orphaned log tmp files (ADVICE r7): a writer crashing
+        # between creating a tmp file and publishing it leaves the tmp
+        # forever — readers ignore it, but nothing else deletes it
+        txlog_log.reap_abandoned_tmps(self.path, now - abandoned_seconds)
         # -- bloom sidecars (r12): a sidecar is live while ANY retained
         # snapshot's filters reference it. Unreferenced ones (failed
         # commits, dropped indexes, vacuumed history) are reaped under

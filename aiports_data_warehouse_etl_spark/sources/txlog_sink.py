@@ -57,6 +57,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from aiports_data_warehouse_etl_spark.sources.txlog_log import (
+    reclaim_tokens,
+    write_marker,
+)
+
 
 @dataclass
 class _TxLogCommitMessage(WriterCommitMessage):
@@ -93,16 +98,13 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from aiports_data_warehouse_etl_spark.sources.txlog import (
-            _file_stats,
-            _write_marker,
-        )
+        from aiports_data_warehouse_etl_spark.sources.txlog import _file_stats
 
         batches = [b for b in iterator if b.num_rows > 0]
         if not batches:
             return _TxLogCommitMessage()  # empty task: nothing staged
         token = uuid.uuid4().hex
-        _write_marker(self.path, token)  # BEFORE data (vacuum protocol)
+        write_marker(self.path, token)  # BEFORE data (vacuum protocol)
         rel_dir = os.path.join("data", token)
         abs_dir = os.path.join(self.path, rel_dir)
         os.makedirs(abs_dir)
@@ -235,11 +237,7 @@ class _TxLogStreamWriter(DataSourceStreamArrowWriter):
             )
 
     def abort(self, messages, batchId: int) -> None:
-        from aiports_data_warehouse_etl_spark.sources.txlog import (
-            _reclaim_tokens,
-        )
-
-        _reclaim_tokens(self.path, self._tokens(messages))
+        reclaim_tokens(self.path, self._tokens(messages))
 
 
 class TxLogSinkSource(DataSource):

@@ -57,115 +57,19 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_LOG_DIR = "_txlog"
+from aiports_data_warehouse_etl_spark.sources import txlog_log
 
 
-def _latest_version(path: str) -> int:
-    best = -1
-    log_dir = os.path.join(path, _LOG_DIR)
-    if not os.path.isdir(log_dir):
-        return best
-    for name in os.listdir(log_dir):
-        if name.endswith(".json") and not name.endswith(".checkpoint.json"):
-            best = max(best, int(name.split(".")[0]))
-    return best
+def _head_schema(path: str) -> tuple[str, list]:
+    """(schema JSON, renames) of the table at its latest version."""
+    snap = txlog_log.state_at(path, txlog_log.latest_version(path))
+    if snap["schema"] is None:
+        raise ValueError(f"txlog table {path} has no schema-bearing commits")
+    return snap["schema"], snap["renames"]
 
 
-def _read_commit(path: str, version: int) -> dict:
-    fname = f"{version:020d}.json"
-    with open(os.path.join(path, _LOG_DIR, fname)) as fh:
-        return json.load(fh)
-
-
-def _table_fields(path: str) -> list[tuple[str, str]]:
-    """(name, DDL type) pairs of the table schema at the stream start,
-    resolved from the newest commit that recorded a schema."""
-    from pyspark.sql import types as T
-
-    for v in range(_latest_version(path), -1, -1):
-        c = _read_commit(path, v)
-        if c.get("schema"):
-            st = T.StructType.fromJson(json.loads(c["schema"]))
-            return [(f.name, f.dataType.simpleString()) for f in st.fields]
-    raise ValueError(f"txlog table {path} has no schema-bearing commits")
-
-
-def _table_schema_json(path: str) -> str:
-    for v in range(_latest_version(path), -1, -1):
-        c = _read_commit(path, v)
-        if c.get("schema"):
-            return c["schema"]
-    raise ValueError(f"txlog table {path} has no schema-bearing commits")
-
-
-def _dvs_at(path: str, version: int) -> dict[str, list[str]]:
-    """{data_rel: [dv_rel, ...]} — deletion vectors active at
-    ``version``, replayed from the newest checkpoint ≤ version with
-    the same fold as ``TxLogTable._snapshot`` (O(commits since
-    checkpoint), never O(history))."""
-    if version < 0:
-        return {}
-    start = 0
-    dvs: dict[str, list[str]] = {}
-    for v in range(version, -1, -1):
-        cp = os.path.join(path, _LOG_DIR, f"{v:020d}.checkpoint.json")
-        if os.path.exists(cp):
-            with open(cp) as fh:
-                state = json.load(fh)
-            dvs = {
-                rel: [e["file"] for e in entries]
-                for rel, entries in state.get("dvs", {}).items()
-            }
-            start = v + 1
-            break
-    for v in range(start, version + 1):
-        c = _read_commit(path, v)
-        for rel in c.get("remove", []):
-            dvs.pop(rel, None)
-        if c.get("dv_targets"):
-            # any commit may carry a DV (delete_dv, update_mor)
-            for data_rel in c["dv_targets"]:
-                dvs.setdefault(data_rel, []).append(c["dv_file"])
-        if c.get("op") in ("restore", "clone"):
-            # replacement, not fold — mirrors TxLogTable._snapshot
-            dvs = {
-                rel: [e["file"] for e in entries]
-                for rel, entries in c["dvs"].items()
-            }
-    return dvs
-
-
-def _rename_state_at(path: str, version: int) -> tuple[list, dict]:
-    """(renames, file_epoch) active at ``version`` — same
-    checkpoint-seeded fold as ``TxLogTable._snapshot`` (see that
-    method for the epoch semantics)."""
-    if version < 0:
-        return [], {}
-    start = 0
-    rn: list = []
-    fe: dict = {}
-    for v in range(version, -1, -1):
-        cp = os.path.join(path, _LOG_DIR, f"{v:020d}.checkpoint.json")
-        if os.path.exists(cp):
-            with open(cp) as fh:
-                state = json.load(fh)
-            rn = [list(r) for r in state.get("renames", [])]
-            fe = dict(state.get("file_epoch", {}))
-            start = v + 1
-            break
-    for v in range(start, version + 1):
-        c = _read_commit(path, v)
-        if c.get("op") == "rename_column":
-            rn = rn + [[c["old"], c["new"]]]
-        if c.get("op") in ("restore", "clone") and "renames" in c:
-            rn = [list(r) for r in c["renames"]]
-        for rel in c.get("remove", []):
-            fe.pop(rel, None)
-        for add in c.get("add", []):
-            fe[add["path"]] = c.get("epochs", {}).get(
-                add["path"], len(rn)
-            )
-    return rn, fe
+def _dv_files(state: dict, rel: str) -> list[str]:
+    return [e["file"] for e in state["dvs"].get(rel, [])]
 
 
 class _CDFPartition(InputPartition):
@@ -204,11 +108,7 @@ class _TxLogCDFReader(DataSourceStreamReader):
         self.per_batch = int(options.get("versions_per_batch", 10))
         # start AFTER this version (default: from the beginning)
         self.start = int(options.get("start_version", -1))
-        self.fields = [name for name, _ in _table_fields(self.path)]
-        self.schema_json = _table_schema_json(self.path)
-        self.renames, _ = _rename_state_at(
-            self.path, _latest_version(self.path)
-        )
+        self.schema_json, self.renames = _head_schema(self.path)
         self._hwm: int | None = None  # newest offset handed to Spark
 
     # -- offsets (driver) ------------------------------------------------
@@ -217,7 +117,7 @@ class _TxLogCDFReader(DataSourceStreamReader):
         return {"v": self.start}
 
     def latestOffset(self) -> dict:
-        latest = _latest_version(self.path)
+        latest = txlog_log.latest_version(self.path)
         if self._hwm is None:
             # first trigger of this reader instance: the true start
             # offset lives in Spark's checkpoint (we never see it
@@ -243,107 +143,78 @@ class _TxLogCDFReader(DataSourceStreamReader):
         v0, v1 = int(start["v"]), int(end["v"])
         # keep pacing monotone across replays/restarts
         self._hwm = v1 if self._hwm is None else max(self._hwm, v1)
-        dvs = _dvs_at(self.path, v0)
-        # rename state: every emitted file walks its physical names
-        # forward to the stream's DECLARED schema (fixed at reader
-        # construction); a rename landing MID-STREAM changes the
-        # logical schema and must fail the query loudly (the standard
-        # streaming schema-change contract: restart picks it up)
+        # table state BEFORE the commit being planned (at v-1), folded
+        # forward once each commit's delete side is planned. Every
+        # emitted file walks its physical names forward to the
+        # stream's DECLARED schema (fixed at reader construction); a
+        # rename landing MID-STREAM changes the logical schema and
+        # must fail the query loudly (the standard streaming
+        # schema-change contract: restart picks it up)
+        state = txlog_log.state_at(self.path, v0)
         target_rn = self.renames
-        rn, fe = _rename_state_at(self.path, v0)
 
         def chain_for(rel: str) -> list:
-            ep = min(int(fe.get(rel, len(rn))), len(target_rn))
+            rn = state["renames"]
+            ep = min(
+                int(state["file_epoch"].get(rel, len(rn))), len(target_rn)
+            )
             return [list(r) for r in target_rn[ep:]]
 
         parts: list[InputPartition] = []
         for v in range(v0 + 1, v1 + 1):
-            c = _read_commit(self.path, v)
+            c = txlog_log.read_commit(self.path, v)
             op = c.get("op")
             if op == "rename_column":
-                step = [c["old"], c["new"]]
-                if (
+                rn = state["renames"]
+                if not (
                     len(rn) < len(target_rn)
-                    and list(target_rn[len(rn)]) == step
+                    and list(target_rn[len(rn)]) == [c["old"], c["new"]]
                 ):
-                    rn = rn + [step]  # known at construction: fine
-                    continue
-                raise ValueError(
-                    f"txlog_cdf: commit {v} renamed column "
-                    f"{c['old']!r} -> {c['new']!r} after this stream "
-                    "started — the declared schema is stale; restart "
-                    "the streaming query to pick up the new schema"
-                )
-            if op == "compact":
-                # pure layout: no rows change; the rewrite applied and
-                # dropped the removed files' DVs
-                for rel in c.get("remove", []):
-                    dvs.pop(rel, None)
-                    fe.pop(rel, None)
-                for add in c.get("add", []):
-                    fe[add["path"]] = len(rn)
-                continue
-            if c.get("dv_targets"):
-                # MoR commit (delete_dv, update_mor): the DV-addressed
-                # rows emit as 'delete'; update_mor's added files fall
-                # through to the generic insert planning below
-                self._require(c["dv_file"], v0, v1)
-                for rel in sorted(c["dv_targets"]):
-                    self._require(rel, v0, v1)
+                    raise ValueError(
+                        f"txlog_cdf: commit {v} renamed column "
+                        f"{c['old']!r} -> {c['new']!r} after this stream "
+                        "started — the declared schema is stale; restart "
+                        "the streaming query to pick up the new schema"
+                    )
+            elif op != "compact":  # compact is pure layout: no rows change
+                if c.get("dv_targets"):
+                    # MoR commit (delete_dv, update_mor): the
+                    # DV-addressed rows emit as 'delete'; update_mor's
+                    # added files take the insert side below
+                    self._require(c["dv_file"], v0, v1)
+                    for rel in sorted(c["dv_targets"]):
+                        self._require(rel, v0, v1)
+                        parts.append(
+                            _CDFPartition(
+                                "dv_delete", rel, v, [c["dv_file"]],
+                                chain=chain_for(rel),
+                            )
+                        )
+                for rel in sorted(c.get("remove", [])):
+                    excl = _dv_files(state, rel)
+                    for p in [rel, *excl]:
+                        self._require(p, v0, v1)
                     parts.append(
                         _CDFPartition(
-                            "dv_delete", rel, v, [c["dv_file"]],
-                            chain=chain_for(rel),
+                            "delete", rel, v, excl, chain=chain_for(rel)
                         )
                     )
-                    dvs.setdefault(rel, []).append(c["dv_file"])
-                if op == "delete_dv":
-                    continue  # pure MoR delete: nothing added
-            # a RESTORE's re-added files come back with their restored
-            # DVs: the insert side must exclude those rows (mirrors
-            # TxLogTable.changes), and the fold state is REPLACED
-            restore_dvs: dict[str, list[str]] = (
-                {
-                    rel: [e["file"] for e in entries]
-                    for rel, entries in c["dvs"].items()
-                }
-                if op in ("restore", "clone")
-                else {}
-            )
-            for rel in sorted(c.get("remove", [])):
-                excl = list(dvs.get(rel, []))
-                for p in [rel, *excl]:
-                    self._require(p, v0, v1)
-                parts.append(
-                    _CDFPartition(
-                        "delete", rel, v, excl, chain=chain_for(rel)
-                    )
-                )
+            txlog_log.replay(state, c)
+            if op == "compact":
+                continue
+            # inserts plan under the state AFTER the commit: a
+            # RESTORE's re-added files come back with their restored
+            # DVs, whose rows the insert side must exclude
             for add in c.get("add", []):
-                excl = list(restore_dvs.get(add["path"], []))
+                excl = _dv_files(state, add["path"])
                 for p in [add["path"], *excl]:
                     self._require(p, v0, v1)
-                ep_ins = min(
-                    int(c.get("epochs", {}).get(add["path"], len(rn))),
-                    len(target_rn),
-                )
                 parts.append(
                     _CDFPartition(
                         "insert", add["path"], v, excl,
-                        chain=[list(r) for r in target_rn[ep_ins:]],
+                        chain=chain_for(add["path"]),
                     )
                 )
-            for rel in c.get("remove", []):
-                dvs.pop(rel, None)
-                fe.pop(rel, None)
-            for add in c.get("add", []):
-                fe[add["path"]] = c.get("epochs", {}).get(
-                    add["path"], len(rn)
-                )
-            if op in ("restore", "clone"):
-                dvs = {rel: list(fs) for rel, fs in restore_dvs.items()}
-                if "renames" in c:
-                    rn = [list(r) for r in c["renames"]]
         return parts
 
     # -- decode (EXECUTORS: pyarrow → Arrow RecordBatches) ---------------
@@ -433,8 +304,13 @@ class TxLogChangeFeedSource(DataSource):
         return "txlog_cdf"
 
     def schema(self) -> str:
-        fields = _table_fields(self.options["path"])
-        cols = ", ".join(f"{n} {t}" for n, t in fields)
+        from pyspark.sql import types as T
+
+        schema_json, _ = _head_schema(self.options["path"])
+        st = T.StructType.fromJson(json.loads(schema_json))
+        cols = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in st.fields
+        )
         return f"{cols}, _change_type string, _commit_version bigint"
 
     def streamReader(self, schema) -> DataSourceStreamReader:

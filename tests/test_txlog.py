@@ -4657,3 +4657,92 @@ def test_string_stats_truncated_and_sound(spark, tmp_path):
     assert _stat_trunc_min("b" * 100) == "b" * _STAT_STR_MAX
     s = _stat_trunc_max("b" * 100)
     assert len(s) <= _STAT_STR_MAX and s > "b" * 100
+
+
+# -- the log module (sources/txlog_log.py) on tables built by the verbs --
+
+
+def _resolved_state(state: dict) -> dict:
+    """``state`` with write-schema ids resolved to schemas: a
+    checkpoint renumbers the ids, the schemas they stand for stay."""
+    out = {
+        k: v for k, v in state.items() if k not in ("schemas", "file_schema")
+    }
+    out["file_schema"] = {
+        rel: None if sid is None else state["schemas"][sid]
+        for rel, sid in state["file_schema"].items()
+    }
+    return out
+
+
+def test_txlog_log_fold_equals_snapshot_at_every_version(spark, tbl):
+    from aiports_data_warehouse_etl_spark.sources import txlog_log
+
+    tbl.append(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(40)], "id int, v double"
+        ).repartition(2)
+    )                                                 # v0
+    tbl.delete_where_dv("id % 7 = 0")                 # v1
+    tbl.update_where_mor("id % 5 = 1", {"v": "v + 100"})  # v2
+    tbl.compact()                                     # v3
+    tbl.rename_column("v", "w")                       # v4: checkpoint
+    tbl.restore(2)                                    # v5
+    assert tbl.latest_version() == 5
+    state = txlog_log.empty_state()
+    for v in range(6):
+        txlog_log.replay(state, txlog_log.read_commit(tbl.path, v))
+        assert _resolved_state(state) == _resolved_state(tbl._snapshot(v)), v
+    assert state["renames"] == [] and state["dvs"]
+
+
+def test_checkpoint_without_later_layout_keys_still_opens(spark, tmp_path):
+    """A checkpoint from before deletion vectors, per-file write
+    schemas, the protocol floor and the token ledger existed lacks
+    those keys: the table must read the same rows, resolve the same
+    committed tokens and vacuum no live file."""
+    from aiports_data_warehouse_etl_spark.sources import txlog_log
+
+    path = str(tmp_path / "t")
+    t = TxLogTable(spark, path, checkpoint_every=4)
+
+    def rows(lo, hi, col="v"):
+        return spark.createDataFrame(
+            [(i, float(i)) for i in range(lo, hi)], f"id int, {col} double"
+        ).repartition(2)
+
+    t.append(rows(0, 20))                 # v0
+    t.rename_column("v", "w")             # v1
+    t.add_bloom_index("id")               # v2
+    t.append(rows(20, 30, "w"))           # v3 (bloom filters ride it)
+    t.append(rows(30, 40, "w"))           # v4: checkpoint
+    t.delete_where_dv("id % 7 = 0")       # v5
+    t.delete_where("id = 1")              # v6: a rewrite leaves dead files
+    cp = txlog_log.checkpoint_path(path, 4)
+    with open(cp) as fh:
+        state = json.load(fh)
+    assert state["renames"] and state["blooms"]["id"]
+    for key in ("dvs", "schemas", "file_schema", "protocol", "tokens"):
+        del state[key]
+    with open(cp, "w") as fh:
+        json.dump(state, fh)
+    expected = sorted(t.read().collect())
+
+    fresh = TxLogTable(spark, path)
+    assert sorted(fresh.read().collect()) == expected
+    assert fresh.read().columns == ["id", "w"]
+    full = set()
+    for v in range(fresh.latest_version() + 1):
+        c = fresh._read_commit(v)
+        full.update(a["path"].split(os.sep)[1] for a in c.get("add", []))
+        if c.get("dv_file"):
+            full.add(c["dv_file"].split(os.sep)[1])
+    assert fresh._committed_tokens(fresh.latest_version()) == full
+    snap = fresh._snapshot()
+    live = set(snap["files"]) | {
+        e["file"] for entries in snap["dvs"].values() for e in entries
+    }
+    deleted = fresh.vacuum(grace_seconds=0.0)
+    assert deleted and not live & set(deleted)
+    assert all(os.path.exists(os.path.join(path, rel)) for rel in live)
+    assert sorted(TxLogTable(spark, path).read().collect()) == expected
