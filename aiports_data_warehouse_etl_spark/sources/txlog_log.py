@@ -100,15 +100,28 @@ def _synced_tmp(path: str, payload: bytes) -> str:
     return tmp
 
 
+def _sync_dir(path: str) -> None:
+    """Fsync the directory holding ``path``, so a name just published
+    there (link or rename) survives a power loss: fsyncing the file
+    makes its content durable, not its directory entry."""
+    fd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def put_if_absent(path: str, payload: bytes) -> bool:
     """Create ``path`` holding ``payload`` unless it exists: False when
     another writer holds the name. The full payload is written and
     fsynced to a tmp file first, then hard-linked into place: link(2)
     fails with EEXIST like O_CREAT|O_EXCL, but the name appears only
     with its complete content (an object store's conditional put is
-    content-atomic the same way). Raises ``FileNotFoundError`` when the
-    tmp file vanished before the link: a vacuum reaped it because
-    this writer stalled past the abandoned-file horizon."""
+    content-atomic the same way). The log directory is fsynced after
+    the link, so a commit reported as landed survives a power loss.
+    Raises ``FileNotFoundError`` when the tmp file vanished before the
+    link: a vacuum reaped it because this writer stalled past the
+    abandoned-file horizon."""
     tmp = _synced_tmp(path, payload)
     try:
         os.link(tmp, path)
@@ -117,6 +130,7 @@ def put_if_absent(path: str, payload: bytes) -> bool:
     finally:
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
+    _sync_dir(path)
     return True
 
 
@@ -124,8 +138,9 @@ def write_checkpoint(root: str, state: dict, tokens: set[str]) -> None:
     """Publish ``state`` (at ``state["version"]``) as a checkpoint,
     with the cumulative staged-token ledger so ``vacuum`` resolves
     committed tokens in O(commits since checkpoint). Same durable tmp
-    as a commit, renamed over any earlier copy: every writer of one
-    version's checkpoint writes the same content.
+    as a commit, renamed over any earlier copy (every writer of one
+    version's checkpoint writes the same content), then the log
+    directory is fsynced like a commit's.
 
     The write-schema ledger is compacted on the way out: replay only
     ever appends to ``schemas``, so one-off variants linger after
@@ -146,6 +161,7 @@ def write_checkpoint(root: str, state: dict, tokens: set[str]) -> None:
     path = checkpoint_path(root, state["version"])
     payload = json.dumps(cp, sort_keys=True).encode()
     os.replace(_synced_tmp(path, payload), path)
+    _sync_dir(path)
 
 
 def reap_abandoned_tmps(root: str, before: float) -> None:

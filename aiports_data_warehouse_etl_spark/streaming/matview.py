@@ -18,13 +18,15 @@ Aggregate classes (the standard incremental-view-maintenance split):
 - min / max are only SEMIGROUP aggregates: an insert tightens a bound
   (``least(old, new)``), but a delete may invalidate it — when the
   deleted value ties or beats the stored bound, the true bound can
-  only come from the surviving rows. The refresh therefore takes the
-  insert-only FAST PATH per group (pure fold, no source access) and
-  falls back to a BOUNDED RESCAN — one source scan semi-joined to
-  just the affected group keys — only for groups where a delete
-  actually touched a bound (deleted_min ≤ stored_min or
-  deleted_max ≥ stored_max). Groups whose deletes sit strictly inside
-  the bounds fold without rescanning (VERDICT r4 next-round #3).
+  only come from the surviving rows. The fold flags (``__rescan``)
+  just the groups where a delete touched a bound (deleted_min ≤
+  stored_min or deleted_max ≥ stored_max). A refresh of a slice that
+  may delete evaluates the folded aggregate ONCE (a local checkpoint)
+  and reads from it whether any group is flagged. Only then is a
+  BOUNDED RESCAN planned: one source scan semi-joined to the flagged
+  group keys, whose min/max replace those groups' folded bounds. With
+  no flag (deletes strictly inside the bounds, or insert-only slices)
+  the refresh never reads the source.
 
 Exactly-once without extra bookkeeping: the view is itself a
 ``TxLogTable``, and each refresh commits via ``overwrite_batch_txn``
@@ -37,7 +39,7 @@ optimistic commit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aiports_data_warehouse_etl_spark.sources.txlog import TxLogTable
@@ -142,53 +144,16 @@ class IncrementalAggView:
                 return True
         return False
 
-    #: Pin (persist) the merged-deltas subtree during a delete-refresh
-    #: only when the change-feed slice is big enough that planning it
-    #: twice (once under the rescan's broadcast build, once as the
-    #: final probe — Spark plans no ReusedExchange across that join)
-    #: costs more than one cache round-trip. Well above any test/demo
-    #: slice — there the persist round-trip measurably LOSES (+8% on
-    #: the sf0.1 bench) — and well below the multi-GB slices where a
-    #: doubled feed scan dominates.
-    _PIN_FEED_BYTES = 256 << 20
-
-    def _slice_change_bytes(self, lo: int, hi: int) -> int:
-        """Driver-side over-estimate (commit JSON only, no Spark job)
-        of the bytes the change feed (lo, hi] must read: bytes added
-        across the slice, plus the bytes of files a slice commit
-        removes or DV-targets (a delete's feed rows are reconstructed
-        from those files)."""
-        total = 0
-        known: dict[str, int] = {}
-        base: dict | None = None
-        for v in range(lo + 1, hi + 1):
-            c = self.source._read_commit(v)
-            for a in c.get("add", []):
-                b = int(a.get("stats", {}).get("bytes", 0))
-                known[a["path"]] = b
-                total += b
-            victims = list(c.get("remove", [])) + sorted(
-                c.get("dv_targets", {})
-            )
-            for rel in victims:
-                if rel in known:
-                    total += known[rel]
-                    continue
-                if base is None:
-                    base = self.source._snapshot(lo)["files"]
-                total += int(base.get(rel, {}).get("bytes", 0))
-        return total
-
     def refresh(self) -> int | None:
         """Fold source commits (last_applied, latest] into the view.
         Returns the view version written, or None when already
         current. ONE keyed aggregation over the union of the CHANGED
         rows and the (aggregate-cardinality) view state
-        (``_merged_agg``); min/max trigger one additional source scan
-        restricted (broadcast semi-join) to the groups whose stored
-        bound a delete hit — and insert-only slices (decided from the
-        commit log on the driver, no extra job) skip the rescan
-        machinery entirely."""
+        (``_merged_agg``), evaluated once (see ``_apply``); a source
+        scan, restricted (broadcast semi-join) to the groups whose
+        stored bound a delete hit, is planned only when some group is
+        flagged. Insert-only slices (decided from the commit log on the
+        driver, no extra job) never flag a group."""
         last = self.last_applied_version()
         cur = self.source.latest_version()
         if cur <= last:
@@ -199,14 +164,10 @@ class IncrementalAggView:
             # feed identity, and the only sound way to seed min/max)
             merged = self._snapshot_agg(cur).filter(F.col("n_rows") > 0)
             return self.view.overwrite_batch_txn(merged, self._APP, cur)
-        may = self._slice_may_delete(last, cur)
-        pin = bool(
-            may
-            and (self.min_cols or self.max_cols)
-            and self._slice_change_bytes(last, cur) >= self._PIN_FEED_BYTES
-        )
         return self._apply(
-            self.source.changes(last, cur), cur, may_delete=may, pin=pin
+            self.source.changes(last, cur),
+            cur,
+            may_delete=self._slice_may_delete(last, cur),
         )
 
     def maintain_streaming(self, checkpoint_dir: str):
@@ -268,46 +229,45 @@ class IncrementalAggView:
         )
 
     def _apply(
-        self,
-        feed: DataFrame,
-        cur: int | None,
-        may_delete: bool = True,
-        pin: bool = False,
+        self, feed: DataFrame, cur: int | None, may_delete: bool = True
     ) -> int | None:
         """Fold one change-feed slice into the stored view (the
         shared core of batch refresh and streaming maintenance):
         ``_merged_agg`` folds the slice and the stored view in one
         keyed aggregation, ``_finish`` fixes the min/max bounds and
         commits. ``cur`` is the slice's end version; pass None
-        (streaming) to derive it from the feed itself — the max commit
-        version is folded into the same aggregation and the
-        aggregate-cardinality result is persisted, so the feed is
-        scanned exactly once. ``may_delete=False`` (decided
-        driver-side from the commit log) elides the delete-side bound
-        aggregates and the min/max rescan join from the plan;
-        ``pin`` persists the merged aggregate across the rescan's
-        double use (see ``_PIN_FEED_BYTES``)."""
+        (streaming) to derive it from the feed itself (the max commit
+        version ``__hi`` is folded into the same aggregation).
+
+        The merged aggregate is evaluated ONCE whenever it is read
+        twice — a delete-capable slice of a min/max view, or any
+        streaming batch: it is ``localCheckpoint``-ed (which, unlike
+        ``persist``, keeps AQE's coalesced partitioning, so the view
+        commit still writes one file). An ``Observation`` on that one
+        evaluation reads whether any group has ``__rescan`` set (and
+        ``max(__hi)``) with no job of its own, and the checkpoint's
+        blocks are released once the commit returns or raises. A batch
+        refresh that cannot flag a group (``may_delete=False``, decided
+        driver-side from the commit log, or a view without min/max)
+        skips the checkpoint: the commit is the fold's only reader."""
         merged = self._merged_agg(feed, may_delete, with_hi=cur is None)
+        bounded = may_delete and bool(self.min_cols or self.max_cols)
+        if cur is not None and not bounded:
+            return self._finish(merged, cur, rescan=False)
+        seen = Observation()
+        probe = [F.expr("max(__rescan) AS rescan")]
         if cur is None:
-            merged = merged.persist()
-            try:
-                hi = merged.agg(F.max("__hi")).collect()[0][0]
-                if hi is None:
+            probe.append(F.expr("max(__hi) AS hi"))
+        merged = merged.observe(seen, *probe).localCheckpoint()
+        try:
+            flags = seen.get
+            if cur is None:
+                if flags["hi"] is None:
                     return None  # empty or fully-replayed batch
-                # merged is pinned: the rescan probe's double use
-                # re-reads the cache — the feed is scanned once
-                return self._finish(
-                    merged.drop("__hi"), int(hi), may_delete
-                )
-            finally:
-                merged.unpersist()
-        if pin:
-            pinned = merged.persist()
-            try:
-                return self._finish(pinned, cur, may_delete)
-            finally:
-                pinned.unpersist()
-        return self._finish(merged, cur, may_delete)
+                cur = int(flags["hi"])
+            return self._finish(merged, cur, rescan=bool(flags["rescan"]))
+        finally:
+            merged._jdf.queryExecution().logical().rdd().unpersist(False)
 
     def _merged_agg(
         self, feed: DataFrame, may_delete: bool, with_hi: bool
@@ -394,18 +354,17 @@ class IncrementalAggView:
             aggs.append(F.max("__hi_v").alias("__hi"))
         return u.groupBy(*self.group_cols).agg(*aggs)
 
-    def _finish(
-        self, merged: DataFrame, cur: int, may_delete: bool
-    ) -> int | None:
-        """Rescan-fix the bound columns of a ``_merged_agg`` result
-        and commit it as the new view state: groups whose stored
-        bound a delete hit re-derive their min/max from ONE bounded
-        source scan (broadcast semi-join on the affected keys; when no
-        bound was hit the build side is empty and the scan prunes to
-        nothing under AQE); insert-only slices skip the rescan subplan
-        entirely."""
-        sum_names = [f"sum_{c}" for c in self.sum_cols]
-        if may_delete and (self.min_cols or self.max_cols):
+    def _finish(self, merged: DataFrame, cur: int, rescan: bool) -> int | None:
+        """Commit a ``_merged_agg`` result as the new view state.
+        ``rescan`` says some group's stored bound was hit by a delete
+        (read from the evaluated aggregate by ``_apply``): only then
+        does the plan hold a source read, ONE scan semi-joined
+        (broadcast) to the flagged groups' keys, whose min/max replace
+        the folded bounds of just those groups. Otherwise the commit
+        reads the merged aggregate alone."""
+        if not rescan:
+            merged = merged.drop("__rescan", "__hi")
+        else:
             affected = merged.filter(F.col("__rescan")).select(
                 *self.group_cols
             )
@@ -420,26 +379,18 @@ class IncrementalAggView:
                 .groupBy(*self.group_cols)
                 .agg(*bound_aggs)
             )
-            merged = merged.join(rescanned, self.group_cols, "left")
-            fixed = []
-            for c in self.min_cols:
-                fixed.append(
-                    F.when(
-                        F.col("__rescan"), F.col(f"__re_min_{c}")
-                    ).otherwise(F.col(f"min_{c}")).alias(f"min_{c}")
-                )
-            for c in self.max_cols:
-                fixed.append(
-                    F.when(
-                        F.col("__rescan"), F.col(f"__re_max_{c}")
-                    ).otherwise(F.col(f"max_{c}")).alias(f"max_{c}")
-                )
-            keep = ["n_rows", *sum_names]
-            merged = merged.select(*self.group_cols, *keep, *fixed)
-        else:
-            merged = merged.drop("__rescan")
+            fixed = [
+                F.when(F.col("__rescan"), F.col(f"__re_{n}"))
+                .otherwise(F.col(n))
+                .alias(n)
+                for n in self._bound_names
+            ]
+            sums = [f"sum_{c}" for c in self.sum_cols]
+            merged = merged.join(rescanned, self.group_cols, "left").select(
+                *self.group_cols, "n_rows", *sums, *fixed
+            )
         # groups whose rows all vanished leave the view entirely
-        merged = merged.filter(F.col("n_rows") > 0)
+        merged = merged.filter("n_rows > 0")
         return self.view.overwrite_batch_txn(merged, self._APP, cur)
 
 

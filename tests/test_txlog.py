@@ -1936,98 +1936,180 @@ def test_matview_minmax_interior_delete_skips_rescan(spark, tbl, tmp_path):
     } == {("a", 5.0, 5.0), ("b", 1.0, 9.0)}
 
 
-def test_matview_delete_refresh_pins_large_slices(spark, tbl, tmp_path):
-    """The delete-refresh plan uses the merged-deltas subtree twice
-    (rescan build side + final probe); for LARGE change slices the
-    refresh must persist it (fold the feed once), for small slices it
-    must not (a cache round-trip costs more than the doubled fold at
-    demo scale). The decision is driver-side from commit-log byte
-    stats — _slice_change_bytes must count both adds and the files a
-    delete removes/DV-targets — and the pinned path must produce the
-    same view as the unpinned one, with the cache released after."""
-    import unittest.mock as um
-
+def _minmax_view(spark, tbl, path):
+    """A count/sum/min/max view of ``val`` per ``k``, built over
+    a: 1, 3, 5, 7 and b: 10."""
     from aiports_data_warehouse_etl_spark.streaming.matview import (
         IncrementalAggView,
     )
 
     mv = IncrementalAggView(
-        spark, tbl, str(tmp_path / "view"),
+        spark, tbl, path,
         group_cols=["k"], sum_cols=["val"],
         min_cols=["val"], max_cols=["val"],
     )
     tbl.append(
         spark.createDataFrame(
-            [("a", 1.0), ("a", 5.0), ("b", 10.0)], "k string, val double"
+            [("a", 1.0), ("a", 3.0), ("a", 5.0), ("a", 7.0), ("b", 10.0)],
+            "k string, val double",
         )
     )
     mv.refresh()
-    # slice = one append + one bound-hitting COW delete
-    tbl.append(spark.createDataFrame([("b", 20.0)], "k string, val double"))
-    tbl.delete_where("k = 'a' AND val = 5.0")
+    return mv
 
-    est = mv._slice_change_bytes(
-        mv.last_applied_version(), tbl.latest_version()
-    )
-    # counts the appended file AND the delete's removed-file bytes
-    assert est > 0
-    snap = tbl._snapshot()
-    live_bytes = sum(st["bytes"] for st in snap["files"].values())
-    assert est > live_bytes - live_bytes // 2  # more than adds alone
 
-    pins: list = []
-    orig_apply = IncrementalAggView._apply
-
-    # r13: the pin decision is observable at _apply (the merged
-    # union-aggregate replaced the _merge join path as the default)
-    def spy_apply(self, feed, cur, may_delete=True, pin=False):
-        pins.append(pin)
-        return orig_apply(self, feed, cur, may_delete=may_delete, pin=pin)
-
-    # small slice (default threshold): no pin
-    with um.patch.object(IncrementalAggView, "_apply", spy_apply):
-        mv.refresh()
-    assert pins == [False]
-    expect = {
-        (r.k, r.n_rows, r.min_val, r.max_val)
-        for r in mv.read().collect()
-    }
-
-    # same slice shape with the threshold forced to 0: pinned path,
-    # identical result, cache released afterwards
-    tbl.delete_where("k = 'b' AND val = 20.0")
-    mv2 = IncrementalAggView(
-        spark, tbl, str(tmp_path / "view2"),
-        group_cols=["k"], sum_cols=["val"],
-        min_cols=["val"], max_cols=["val"],
-    )
-    jsc = spark.sparkContext._jsc.sc()
-    with um.patch.object(IncrementalAggView, "_PIN_FEED_BYTES", 0):
-        mv2.refresh()  # initial build (no pin path)
-        tbl.append(
-            spark.createDataFrame([("a", 2.0)], "k string, val double")
-        )
-        tbl.delete_where("k = 'b'")  # bound hit -> rescan + pin
-        baseline_cached = jsc.getPersistentRDDs().size()
-        pins.clear()
-        with um.patch.object(IncrementalAggView, "_apply", spy_apply):
-            mv2.refresh()
-    assert pins == [True]
-    assert jsc.getPersistentRDDs().size() == baseline_cached
-    full = {
-        (r.k, r.n, r.lo, r.hi)
+def _fresh_minmax(tbl):
+    """The state a refreshed ``_minmax_view`` must equal: a fresh
+    aggregate of the table."""
+    return {
+        (r.k, r.n, round(r.s, 6), r.lo, r.hi)
         for r in tbl.read().groupBy("k").agg(
             F.count(F.lit(1)).alias("n"),
+            F.sum("val").alias("s"),
             F.min("val").alias("lo"),
             F.max("val").alias("hi"),
         ).collect()
     }
-    got = {
-        (r.k, r.n_rows, r.min_val, r.max_val)
-        for r in mv2.read().collect()
+
+
+def _stored_minmax(mv):
+    return {
+        (r.k, r.n_rows, round(r.sum_val, 6), r.min_val, r.max_val)
+        for r in mv.read().collect()
     }
-    assert got == full
-    assert expect  # first view still intact/readable
+
+
+def test_matview_delete_refresh_matches_fresh_aggregate(spark, tbl, tmp_path):
+    """A delete refresh evaluates the merged aggregate once, into a
+    local checkpoint it releases afterwards. After copy-on-write and
+    deletion-vector deletes, bound-hitting or not, the view equals a
+    fresh count/sum/min/max aggregate and no persisted RDD outlives
+    the refresh."""
+    mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
+    jsc = spark.sparkContext._jsc.sc()
+
+    def refresh_and_check():
+        cached = jsc.getPersistentRDDs().size()
+        assert mv.refresh() is not None
+        assert jsc.getPersistentRDDs().size() == cached
+        assert _stored_minmax(mv) == _fresh_minmax(tbl)
+
+    # an append plus a copy-on-write delete of a's max
+    tbl.append(spark.createDataFrame([("b", 20.0)], "k string, val double"))
+    tbl.delete_where("k = 'a' AND val = 7.0")
+    refresh_and_check()
+    # a DV delete strictly inside a's bounds (1.0 .. 5.0)
+    tbl.delete_where_dv("k = 'a' AND val = 3.0")
+    refresh_and_check()
+    # a DV delete of b's max
+    tbl.delete_where_dv("k = 'b' AND val = 20.0")
+    refresh_and_check()
+
+
+def test_matview_refresh_reads_source_only_for_flagged_groups(
+    spark, tbl, tmp_path, monkeypatch
+):
+    """The bounded rescan is planned only when a group is flagged: an
+    interior delete's refresh never calls ``read`` on the source (the
+    view's own read is the fold's), a bound-hitting delete's refresh
+    calls it exactly once."""
+    mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
+    reads: list[str] = []
+    orig_read = TxLogTable.read
+
+    def spying_read(self, *a, **kw):
+        reads.append(self.path)
+        return orig_read(self, *a, **kw)
+
+    monkeypatch.setattr(TxLogTable, "read", spying_read)
+    tbl.delete_where_dv("k = 'a' AND val = 3.0")
+    mv.refresh()
+    assert mv.view.path in reads
+    assert reads.count(tbl.path) == 0
+    reads.clear()
+    tbl.delete_where_dv("k = 'a' AND val = 7.0")
+    mv.refresh()
+    assert reads.count(tbl.path) == 1
+    monkeypatch.undo()
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+
+
+def test_matview_interior_delete_refresh_job_count(spark, tbl, tmp_path):
+    """A delete refresh that flags no group runs the fold once (its
+    checkpoint also observes the flag) and the view commit: 4 jobs on
+    this fixture, with no source read."""
+    import uuid
+
+    mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
+    tbl.delete_where_dv("k = 'a' AND val = 3.0")
+    sc = spark.sparkContext
+    gid = f"matview-refresh-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "matview refresh")
+    try:
+        assert mv.refresh() is not None
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 4
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+
+
+def test_matview_refresh_releases_its_checkpoint(
+    spark, tbl, tmp_path, monkeypatch
+):
+    """No persisted RDD outlives a refresh on any exit: a commit lost
+    to a second refresher (TxConflict), a no-op refresh, a streaming
+    batch, and a streaming batch already folded out of band."""
+    from aiports_data_warehouse_etl_spark.streaming.matview import (
+        IncrementalAggView,
+    )
+
+    view_path = str(tmp_path / "view")
+    mv = _minmax_view(spark, tbl, view_path)
+    rival = IncrementalAggView(
+        spark, tbl, view_path,
+        group_cols=["k"], sum_cols=["val"],
+        min_cols=["val"], max_cols=["val"],
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    cached = jsc.getPersistentRDDs().size()
+    raced: list[int] = []
+    orig_overwrite = TxLogTable._overwrite
+
+    def racing_overwrite(self, *a, **kw):
+        if self.path == mv.view.path and not raced:
+            raced.append(1)
+            # a second refresher folds one more source commit and
+            # commits first, so this commit's base is stale
+            tbl.append(
+                spark.createDataFrame([("c", 2.0)], "k string, val double")
+            )
+            rival.refresh()
+        return orig_overwrite(self, *a, **kw)
+
+    monkeypatch.setattr(TxLogTable, "_overwrite", racing_overwrite)
+    tbl.delete_where_dv("k = 'a' AND val = 7.0")
+    with pytest.raises(TxConflict):
+        mv.refresh()
+    monkeypatch.undo()
+    assert raced
+    assert jsc.getPersistentRDDs().size() == cached
+    assert mv.refresh() is None  # the rival's commit landed
+    assert jsc.getPersistentRDDs().size() == cached
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+
+    ckpt = str(tmp_path / "mv_ckpt")
+
+    def drain():
+        q = mv.maintain_streaming(ckpt)
+        assert q.awaitTermination(180)
+        assert jsc.getPersistentRDDs().size() == cached
+        assert _stored_minmax(mv) == _fresh_minmax(tbl)
+
+    tbl.delete_where_dv("k = 'a' AND val = 1.0")
+    drain()
+    tbl.append(spark.createDataFrame([("b", 4.0)], "k string, val double"))
+    mv.refresh()
+    drain()  # the batch holds only commits the view already folded
 
 
 def test_matview_streaming_maintenance(spark, tbl, tmp_path):
@@ -4228,76 +4310,6 @@ def test_commit_surfaces_vacuum_reaped_tmp_as_txconflict(spark, tbl, monkeypatch
     assert tbl.read().count() == 5
     tbl.append(_orders(spark).limit(3))
     assert tbl.read().count() == 8
-
-def test_matview_delete_refresh_pin_threshold(spark, tbl, tmp_path, monkeypatch):
-    """VERDICT r8 #6: pin the driver-side persist decision for the
-    min/max delete-refresh. A small slice (below _PIN_FEED_BYTES) must
-    refresh UNPINNED (the cache round-trip loses at demo scale); a
-    slice at/above the threshold must refresh PINNED — so a refactor
-    can't silently invert the byte-stats decision. Both branches must
-    produce the identical (correct) view."""
-    from aiports_data_warehouse_etl_spark.streaming import matview as mvmod
-
-    mv = mvmod.IncrementalAggView(
-        spark, tbl, str(tmp_path / "view"),
-        group_cols=["k"], sum_cols=["val"], max_cols=["val"],
-    )
-    seen: list[bool] = []
-    orig_apply = mvmod.IncrementalAggView._apply
-
-    def spy_apply(self, feed, cur, may_delete=True, pin=False):
-        seen.append(pin)
-        return orig_apply(self, feed, cur, may_delete=may_delete, pin=pin)
-
-    monkeypatch.setattr(mvmod.IncrementalAggView, "_apply", spy_apply)
-
-    def expect():
-        return {
-            (r.k, r.n, round(r.s, 6), r.m)
-            for r in tbl.read().groupBy("k").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("val").alias("s"),
-                F.max("val").alias("m"),
-            ).collect()
-        }
-
-    def got():
-        return {
-            (r.k, r.n_rows, round(r.sum_val, 6), r.max_val)
-            for r in mv.read().collect()
-        }
-
-    tbl.append(spark.createDataFrame(
-        [("a", 1.0), ("a", 9.0), ("b", 4.0)], "k string, val double"))
-    mv.refresh()  # initial build: no _apply call
-
-    # small delete slice, real threshold -> unpinned branch
-    tbl.delete_where_dv("k = 'a' AND val = 9.0")
-    assert mv.refresh() is not None
-    assert seen == [False], seen
-    assert got() == expect()
-    # the decision really came from the byte stats: the slice bytes
-    # are positive but far below the 256 MB threshold
-    lo = mv.last_applied_version()
-    assert 0 < mv._slice_change_bytes(lo - 1, lo) < mv._PIN_FEED_BYTES
-
-    # same workload shape with the threshold at 0 -> pinned branch
-    persists: list[int] = []
-    _DF = type(tbl.read())  # the CONCRETE DataFrame class (classic
-    # subclass in Spark 4 — patching pyspark.sql.DataFrame misses it)
-    orig_persist = _DF.persist
-
-    def spy_persist(self, *a, **kw):
-        persists.append(1)
-        return orig_persist(self, *a, **kw)
-
-    monkeypatch.setattr(mvmod.IncrementalAggView, "_PIN_FEED_BYTES", 0)
-    monkeypatch.setattr(_DF, "persist", spy_persist)
-    tbl.delete_where_dv("k = 'b'")
-    assert mv.refresh() is not None
-    assert seen == [False, True], seen
-    assert persists, "pin=True refresh never persisted the merged subtree"
-    assert got() == expect()
 
 
 # ---------------------------------------------------------------------------

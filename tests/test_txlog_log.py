@@ -238,6 +238,52 @@ def test_checkpoint_tmp_is_fsynced_before_publish(tmp_path, monkeypatch):
     assert fresh._snapshot(2) == _fold(*[t._read_commit(v) for v in range(3)])
 
 
+def test_log_directory_is_fsynced_after_each_publish(tmp_path, monkeypatch):
+    """A commit's link and a checkpoint's rename each publish a name in
+    the log directory; only an fsync of the directory itself makes
+    that entry survive a power loss, so one follows each publish."""
+    t = _table_with_commits(tmp_path, 2, checkpoint_every=2)
+    log_dir = os.path.dirname(txlog_log.version_path(t.path, 0))
+    fd_path: dict[int, str] = {}
+    events: list[tuple] = []
+    real_open, real_fsync = os.open, os.fsync
+    real_link, real_replace = os.link, os.replace
+
+    def spy_open(path, flags, *a, **kw):
+        fd = real_open(path, flags, *a, **kw)
+        fd_path[fd] = os.fspath(path)
+        return fd
+
+    def spy_fsync(fd):
+        events.append(("fsync", fd_path.get(fd)))
+        return real_fsync(fd)
+
+    def spy_link(src, dst, **kw):
+        events.append(("publish", os.fspath(dst)))
+        return real_link(src, dst, **kw)
+
+    def spy_replace(src, dst, **kw):
+        events.append(("publish", os.fspath(dst)))
+        return real_replace(src, dst, **kw)
+
+    monkeypatch.setattr(os, "open", spy_open)
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "link", spy_link)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    assert t._try_commit(
+        2, {"op": "append", "add": [_add("data/t2/p0.parquet")],
+            "schema": "S1"},
+    )
+    monkeypatch.undo()
+    seen = [e for e in events if e[0] == "publish" or e[1] == log_dir]
+    assert seen == [
+        ("publish", txlog_log.version_path(t.path, 2)),
+        ("fsync", log_dir),
+        ("publish", txlog_log.checkpoint_path(t.path, 2)),
+        ("fsync", log_dir),
+    ], events
+
+
 def test_latest_version_of_a_missing_log(tmp_path):
     assert txlog_log.latest_version(str(tmp_path / "nothing")) == -1
     assert txlog_log.state_at(str(tmp_path / "nothing"), -1) == (
