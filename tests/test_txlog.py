@@ -1979,31 +1979,105 @@ def _stored_minmax(mv):
     }
 
 
-def test_matview_delete_refresh_matches_fresh_aggregate(spark, tbl, tmp_path):
-    """A delete refresh evaluates the merged aggregate once, into a
-    local checkpoint it releases afterwards. After copy-on-write and
-    deletion-vector deletes, bound-hitting or not, the view equals a
-    fresh count/sum/min/max aggregate and no persisted RDD outlives
-    the refresh."""
+def _spy_pins(monkeypatch):
+    """Record, per ``_finish`` call, whether the merged aggregate it
+    commits was pinned (a local checkpoint reads as a ``LogicalRDD``)."""
+    from aiports_data_warehouse_etl_spark.streaming.matview import (
+        IncrementalAggView,
+    )
+
+    pins: list[bool] = []
+    orig_finish = IncrementalAggView._finish
+
+    def spy_finish(self, merged, cur, rescan):
+        plan = merged._jdf.queryExecution().logical()
+        pins.append(plan.getClass().getSimpleName() == "LogicalRDD")
+        return orig_finish(self, merged, cur, rescan)
+
+    monkeypatch.setattr(IncrementalAggView, "_finish", spy_finish)
+    return pins
+
+
+def test_matview_delete_refresh_pins_large_slices(
+    spark, tbl, tmp_path, monkeypatch
+):
+    """A delete refresh of a min/max view reads the merged aggregate
+    twice (the flag probe and the commit), so it is evaluated once,
+    into a local checkpoint released afterwards. After a multi-commit
+    slice with a copy-on-write delete, and after deletion-vector
+    deletes, bound-hitting or not, the refresh is pinned, the view
+    equals a fresh count/sum/min/max aggregate and no persisted RDD
+    outlives the refresh."""
     mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
     jsc = spark.sparkContext._jsc.sc()
+    pins = _spy_pins(monkeypatch)
 
     def refresh_and_check():
+        pins.clear()
         cached = jsc.getPersistentRDDs().size()
         assert mv.refresh() is not None
+        assert pins == [True]
         assert jsc.getPersistentRDDs().size() == cached
         assert _stored_minmax(mv) == _fresh_minmax(tbl)
 
-    # an append plus a copy-on-write delete of a's max
-    tbl.append(spark.createDataFrame([("b", 20.0)], "k string, val double"))
+    # several appends plus a copy-on-write delete of a's max
+    for k, v in [("b", 20.0), ("c", 4.0), ("a", 0.5), ("c", 8.0)]:
+        tbl.append(spark.createDataFrame([(k, v)], "k string, val double"))
     tbl.delete_where("k = 'a' AND val = 7.0")
     refresh_and_check()
-    # a DV delete strictly inside a's bounds (1.0 .. 5.0)
+    # a DV delete strictly inside a's bounds (0.5 .. 5.0)
     tbl.delete_where_dv("k = 'a' AND val = 3.0")
     refresh_and_check()
     # a DV delete of b's max
     tbl.delete_where_dv("k = 'b' AND val = 20.0")
     refresh_and_check()
+
+
+def test_matview_delete_refresh_pin_threshold(
+    spark, tbl, tmp_path, monkeypatch
+):
+    """The pin decision takes no byte threshold: it comes from the
+    commit log alone. The smallest delete slice (one DV-deleted row)
+    of a min/max view is pinned; an append-only slice, and any slice
+    of a view without min/max, is not (the commit is the fold's only
+    reader). Every branch produces the fresh aggregate."""
+    from aiports_data_warehouse_etl_spark.streaming.matview import (
+        IncrementalAggView,
+    )
+
+    mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
+    sums = IncrementalAggView(
+        spark, tbl, str(tmp_path / "sums"),
+        group_cols=["k"], sum_cols=["val"],
+    )
+    sums.refresh()  # initial build: no _finish call
+    pins = _spy_pins(monkeypatch)
+
+    def expect_sums():
+        return {
+            (k, n, s) for k, n, s, _lo, _hi in _fresh_minmax(tbl)
+        }
+
+    def got_sums():
+        return {
+            (r.k, r.n_rows, round(r.sum_val, 6))
+            for r in sums.read().collect()
+        }
+
+    tbl.delete_where_dv("k = 'a' AND val = 5.0")
+    assert mv.refresh() is not None
+    assert sums.refresh() is not None
+    assert pins == [True, False]
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+    assert got_sums() == expect_sums()
+
+    pins.clear()
+    tbl.append(spark.createDataFrame([("a", 9.0)], "k string, val double"))
+    assert mv.refresh() is not None
+    assert sums.refresh() is not None
+    assert pins == [False, False]
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+    assert got_sums() == expect_sums()
 
 
 def test_matview_refresh_reads_source_only_for_flagged_groups(
