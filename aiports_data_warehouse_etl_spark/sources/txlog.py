@@ -307,8 +307,8 @@ class TxLogTable:
         # version and scoped to THIS instance (a table re-created at
         # the same path is a new instance), so concurrent writers are
         # seen the moment latest_version() returns a new head. All
-        # consumers treat these as read-only; the forward-folding
-        # consumers (changes(), the CDF planner) fold a copy, and
+        # consumers treat these as read-only; the change planner
+        # (change_plan) folds a copy and memoizes where it ends, and
         # txlog_log.replay copies what it takes from a commit.
         self._commit_memo: dict[int, dict] = {}
         self._snap_memo: dict[int, dict] = {}
@@ -339,14 +339,18 @@ class TxLogTable:
         memo_hit = self._snap_memo.get(head)
         if memo_hit is not None:
             return memo_hit
-        out = txlog_log.state_at(self.path, head, self._read_commit)
+        return self._memo_snapshot(
+            txlog_log.state_at(self.path, head, self._read_commit)
+        )
+
+    def _memo_snapshot(self, state: dict) -> dict:
         # bounded: vacuum/time-travel sweeps walk many versions — keep
         # the newest handful, which is what refresh/commit loops
         # re-resolve
         if len(self._snap_memo) >= 32:
             self._snap_memo.pop(next(iter(self._snap_memo)))
-        self._snap_memo[head] = out
-        return out
+        self._snap_memo[state["version"]] = state
+        return state
 
     def _maintain_blooms(self, commit: dict) -> None:
         """Bloom auto-maintenance: when the table has registered bloom
@@ -3058,49 +3062,39 @@ class TxLogTable:
             self._read_memo[memo_key] = out
         return out
 
+    def change_plan(self, from_version: int, to_version: int):
+        """``txlog_log.change_plan`` of (from_version, to_version] over
+        a copy of the memoized snapshot and commits. Once exhausted,
+        its fold is memoized as the snapshot at ``to_version``."""
+        state = copy.deepcopy(self._snapshot(from_version))
+        yield from txlog_log.change_plan(
+            self.path, state, from_version, to_version,
+            read=self._read_commit,
+        )
+        if state["version"] >= 0 and state["version"] not in self._snap_memo:
+            self._memo_snapshot(state)
+
     def changes(self, from_version: int, to_version: int) -> DataFrame:
         """File-diff change feed: every row inserted or deleted between
         two versions, tagged ``_change_type`` ('insert'/'delete') and
-        ``_commit_version``. Computed purely from the log's add/remove
-        sets — removed files remain readable until vacuum, so the
-        deleted rows themselves come back, not just their count.
-        Copy-on-write rewrites surface as (delete old file's rows,
-        insert rewritten file's rows) — net-exact, though carried rows
-        appear on both sides (the classic file-level CDC shape; a
-        row-level CDF would persist change records at write time).
-        Pure layout commits (compact) are skipped: they change no
-        rows and would otherwise be pure churn in the feed.
-
-        Deletion-vector interplay (ADVICE r4): a row a DV already
-        deleted at commit d was emitted as 'delete' AT d — when a
-        later copy-on-write rewrite removes the DV-carrying file, that
-        row must NOT re-emit. The loop therefore carries the DV state
-        active at v-1 and filters the delete side of every remove
-        through it, keeping the feed net-exact (fold(changes) ==
-        table state, pinned by test_change_feed_dv_then_cow_folds)."""
-        # table state BEFORE the commit being scanned (i.e. at v-1): a
-        # copy of the snapshot at from_version, folded forward with
-        # txlog_log.replay once each commit's delete side is planned
-        state = (
-            copy.deepcopy(self._snapshot(from_version))
-            if from_version >= 0
-            else txlog_log.empty_state()
+        ``_commit_version``."""
+        return self.feed(
+            self.change_plan(from_version, to_version), to_version
         )
 
-        def require(v: int, rels: list[str]) -> None:
-            # an incomplete feed must be LOUD, never a silent hole:
-            # vacuum already reclaimed these files
-            gone = [
-                rel for rel in rels
-                if not os.path.exists(os.path.join(self.path, rel))
-            ]
-            if gone:
-                raise ValueError(
-                    f"changes({from_version}, {to_version}): commit "
-                    f"{v}'s files were vacuumed ({len(gone)} missing, "
-                    f"e.g. {os.path.basename(gone[0])}) — the feed "
-                    "cannot be reconstructed past the retention window"
-                )
+    def feed(self, plan, to_version: int) -> DataFrame:
+        """The change feed of ``plan`` (``change_plan`` sides ending at
+        ``to_version``) under the column names active there: one frame
+        per side. Removed files remain readable until vacuum, so the
+        deleted rows themselves come back, not just their count.
+        Copy-on-write rewrites surface as (delete old file's rows,
+        insert rewritten file's rows): net-exact, though carried rows
+        appear on both sides (the classic file-level CDC shape). A
+        ``dv_delete`` side is the data rows its deletion vector
+        addresses, found by a semi-join on the row address; the other
+        sides read their files under the side's deletion vectors, so
+        the fold of the feed equals the table state (pinned by
+        test_change_feed_dv_then_cow_folds)."""
 
         def tag(frame: DataFrame, kind: str, v: int) -> DataFrame:
             # one projection in SQL text: 8 py4j calls per frame,
@@ -3113,73 +3107,30 @@ class TxLogTable:
             )
 
         frames = []
-        for v in range(from_version + 1, to_version + 1):
-            c = self._read_commit(v)
-            if c.get("op") in ("compact", "rename_column"):
-                # no row changes: compact is pure layout (its rewrite
-                # applied the removed files' DVs); a rename is
-                # metadata-only, and the feed keeps emitting under
-                # each commit's then-current names
-                txlog_log.replay(state, c)
-                continue
-            if c.get("dv_targets"):
-                # merge-on-read commit (delete_dv, update_mor): the
-                # deleted rows are the data rows the DV addresses — a
-                # semi-join on the row address reconstructs them
-                # exactly. update_mor ALSO adds files (the updated
-                # copies); those take the generic insert side below.
-                targets = sorted(c["dv_targets"])
-                require(v, [c["dv_file"], *targets])
+        for side in plan:
+            if side.kind == "dv_delete":
                 data = self._read_with_dvs(
-                    targets, {}, keep_lineage=True, snap=state
+                    side.rels, {}, keep_lineage=True, snap=side.state
                 )
                 dv = self.spark.read.schema(
                     "file_rel string, row_index bigint"
-                ).parquet(os.path.join(self.path, c["dv_file"])).select(
+                ).parquet(os.path.join(self.path, side.dv_file)).select(
                     F.col("file_rel").alias("__file_rel"),
                     F.col("row_index").alias("__row_index"),
                 )
-                deleted = data.join(
+                rows = data.join(
                     dv, ["__file_rel", "__row_index"], "left_semi"
                 ).select(*self._data_cols(data))
-                frames.append(
-                    (tag(deleted, "delete", v), len(state["renames"]))
+            else:
+                rows = self._read_with_dvs(
+                    side.rels, side.state["dvs"], snap=side.state
                 )
-            # the delete side excludes rows a DV active at v-1 already
-            # emitted as deleted, so those DV files must still exist
-            removed = list(c.get("remove", []))
-            require(v, removed + [
-                e["file"] for rel in removed
-                for e in state["dvs"].get(rel, [])
-            ])
-            if removed:
-                del_frame = tag(
-                    self._read_with_dvs(removed, state["dvs"], snap=state),
-                    "delete", v,
-                )
-                del_rn = len(state["renames"])
-            txlog_log.replay(state, c)
-            # the insert side reads under the state AFTER the commit:
-            # its write schemas and rename epochs, and for a RESTORE
-            # the restored renames and deletion vectors (the re-added
-            # files come back without the rows those DVs address)
-            added = [a["path"] for a in c.get("add", [])]
-            require(v, added + [
-                e["file"] for rel in added
-                for e in state["dvs"].get(rel, [])
-            ])
-            if added:
-                frames.append((
-                    tag(
-                        self._read_with_dvs(added, state["dvs"], snap=state),
-                        "insert", v,
-                    ),
-                    len(state["renames"]),
-                ))
-            if removed:
-                frames.append((del_frame, del_rn))
+            kind = "insert" if side.kind == "insert" else "delete"
+            frames.append(
+                (tag(rows, kind, side.version), len(side.state["renames"]))
+            )
+        snap = self._snapshot(to_version)
         if not frames:
-            snap = self._snapshot(to_version)
             if snap["schema"] is None:
                 raise ValueError(f"txlog table {self.path} has no commits")
             schema = T.StructType.fromJson(json.loads(snap["schema"]))
@@ -3193,7 +3144,7 @@ class TxLogTable:
         # crossing a RESTORE that reverts renames keeps commit-time
         # names for the reverted span — the restore replaced the
         # mapping wholesale, so no forward chain exists.)
-        final_rn = state["renames"]
+        final_rn = snap["renames"]
         lifted = []
         for f, k in frames:
             for old_c, new_c in final_rn[min(k, len(final_rn)):]:

@@ -16,7 +16,8 @@ Layout under a table root::
 ``<v>`` is the version zero-padded to 20 digits. Every commit is a
 dict with an ``op`` and optional action keys (``add``, ``remove``,
 ``dv_targets``/``dv_file``, ``schema``, ``blooms``, ...); ``replay``
-is the one rule that folds a commit into table state.
+is the one rule that folds a commit into table state, and
+``change_plan`` the one rule for which rows a commit changed.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 LOG_DIR = "_txlog"
 STAGING_DIR = "_staging"
@@ -434,10 +436,11 @@ def replay(state: dict, commit: dict) -> dict:
         # re-adds carry theirs, as their files predate the head
         state["file_epoch"][rel] = epochs.get(rel, len(state["renames"]))
     # any commit may carry a deletion vector (delete_dv, update_mor)
+    # (a new list: states the change planner handed out share them)
     for rel, n in commit.get("dv_targets", {}).items():
-        state["dvs"].setdefault(rel, []).append(
+        state["dvs"][rel] = state["dvs"].get(rel, []) + [
             {"file": commit["dv_file"], "rows": int(n)}
-        )
+        ]
     if op in _AFTER_FILES:
         _AFTER_FILES[op](state, commit)
     # per-file filters of auto-maintained bloom indexes
@@ -456,3 +459,103 @@ def state_at(root: str, version: int, read=None) -> dict:
     for v in range(state["version"] + 1, version + 1):
         replay(state, read(v))
     return state
+
+
+# -- change feed --------------------------------------------------------
+
+
+class ChangeSide(NamedTuple):
+    """Rows one commit changed, as data files to read. ``kind`` is
+    ``dv_delete`` (the rows of ``rels`` that the commit's own
+    ``dv_file`` addresses were deleted), ``delete`` (the visible rows
+    of ``rels`` were deleted) or ``insert`` (the visible rows of
+    ``rels`` were inserted). ``state`` (``_side_view``) is the table
+    state to read ``rels`` under: before the commit for the delete
+    kinds, after it for ``insert``; its ``dvs`` hide rows."""
+
+    version: int
+    kind: str
+    rels: list
+    state: dict
+    dv_file: str | None = None
+
+
+def _side_view(state: dict, rels: list) -> dict:
+    """What reading ``rels`` under ``state`` needs, in O(len(rels)):
+    their rename epochs, write schemas and DVs. A fold replaces
+    ``renames`` and each file's DV list rather than mutating them, and
+    ``schemas`` only grows (ids stay valid), so the view shares them
+    and still never sees a later fold."""
+    view = {k: state[k] for k in ("version", "schema", "renames", "schemas")}
+    for k in ("file_epoch", "file_schema", "dvs"):
+        view[k] = {r: state[k][r] for r in rels if r in state[k]}
+    return view
+
+
+def _require(root: str, side: ChangeSide, lo: int, hi: int) -> None:
+    need = side.rels + (
+        [side.dv_file] if side.dv_file
+        else [e["file"] for es in side.state["dvs"].values() for e in es]
+    )
+    gone = [r for r in need if not os.path.exists(os.path.join(root, r))]
+    if gone:
+        raise ValueError(
+            f"change feed ({lo}, {hi}]: commit {side.version}'s files "
+            f"were vacuumed ({len(gone)} missing, e.g. "
+            f"{os.path.basename(gone[0])}) — the feed cannot be "
+            "reconstructed past the retention window"
+        )
+
+
+def change_plan(root: str, state: dict, lo: int, hi: int, read=None):
+    """Yield the ``ChangeSide``s of each commit in (``lo``, ``hi``]:
+    the one rule for which rows a commit changed, behind the batch
+    change feed, its streaming twin and the materialized views.
+    ``state`` is the table state at ``lo``; the plan folds it forward
+    in place with ``replay``, so once exhausted it is the state at
+    ``hi`` (pass a copy of a state that must stay as it is).
+    ``read(v)`` returns commit ``v`` (default: from disk). Removed
+    files are read under the DVs active before the commit (rows an
+    earlier DV deleted are not deleted twice), added ones under the
+    DVs after it (a restore's re-adds come back without the rows
+    their restored DVs hide). Compact and rename_column change no row
+    and have no side. A side whose files are gone raises
+    ``ValueError``: an incomplete feed must never pass for a complete
+    one. Cost: O(commits + files the sides name)."""
+    read = read or (lambda v: read_commit(root, v))
+    for v in range(lo + 1, hi + 1):
+        c = read(v)
+        op = c.get("op")
+        if op in ("compact", "rename_column"):
+            replay(state, c)
+            continue
+        targets = sorted(c.get("dv_targets", {}))
+        removed = list(c.get("remove", []))
+        added = [a["path"] for a in c.get("add", [])]
+        redone = []
+        if op in ("restore", "clone"):
+            # the commit replaces the DV map with its own (``_restore``):
+            # files it neither adds nor removes whose DVs change have
+            # their rows changed with no file action, so they leave
+            # under the old DVs and come back under the new ones
+            old, new = state["dvs"], c["dvs"]
+            redone = [
+                rel for rel in {*old, *new} - {*removed, *added}
+                if old.get(rel, []) != new.get(rel, [])
+            ]
+        sides = []
+        if targets:
+            sides.append(ChangeSide(
+                v, "dv_delete", targets, _side_view(state, targets),
+                c["dv_file"],
+            ))
+        if removed or redone:
+            rels = sorted(removed + redone)
+            sides.append(ChangeSide(v, "delete", rels, _side_view(state, rels)))
+        replay(state, c)
+        if added or redone:
+            rels = sorted(added + redone)
+            sides.append(ChangeSide(v, "insert", rels, _side_view(state, rels)))
+        for side in sides:
+            _require(root, side, lo, hi)
+            yield side

@@ -34,15 +34,14 @@ matching Spark's restart semantics where the true start offset lives
 in the checkpoint, not the reader), the high-water mark advances by
 at most that many commits per trigger.
 
-Commit handling mirrors ``TxLogTable.changes()``: compact commits are
-pure layout (skipped); copy-on-write rewrites surface as
-delete(old file rows) + insert(new file rows); ``delete_dv`` commits
-emit exactly the rows their deletion vector addresses (row-position
-take inside each target file). Deletion-vector interplay (ADVICE r4):
-a row a DV already deleted was emitted as 'delete' at the delete_dv
-commit — when a later rewrite removes the DV-carrying file, the
-planner attaches the DVs active at v-1 to the delete partition and
-the executor EXCLUDES those row positions, so the feed never
+Which rows each commit changed is decided by the one change planner,
+``txlog_log.change_plan``, that ``TxLogTable.changes()`` and the
+materialized views also use: each of its sides becomes one partition
+per data file. A ``dv_delete`` partition takes just the row positions
+its deletion vector addresses; a ``delete`` or ``insert`` partition
+drops the positions addressed by the side's deletion vectors (for a
+delete, rows an earlier DV already emitted as deleted; for an insert,
+rows a restored DV hides), with a NumPy mask, so the feed never
 double-deletes and the signed fold stays net-exact.
 """
 
@@ -51,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -68,18 +68,16 @@ def _head_schema(path: str) -> tuple[str, list]:
     return snap["schema"], snap["renames"]
 
 
-def _dv_files(state: dict, rel: str) -> list[str]:
-    return [e["file"] for e in state["dvs"].get(rel, [])]
-
-
 class _CDFPartition(InputPartition):
     """One executor task = one data file of one commit.
 
-    kind='insert'  → emit every row of ``rel`` as 'insert'
+    kind='insert'  → emit rows of ``rel`` as 'insert', EXCLUDING row
+                     positions addressed by ``dv_rels`` (the deletion
+                     vectors active after the commit: a restore's)
     kind='delete'  → emit rows of ``rel`` as 'delete', EXCLUDING row
                      positions addressed by ``dv_rels`` (the deletion
-                     vectors active at v-1 — those rows already
-                     emitted 'delete' at their delete_dv commit)
+                     vectors active before the commit — those rows
+                     already emitted 'delete' at their own commit)
     kind='dv_delete' → emit ONLY the rows of ``rel`` addressed by the
                      single DV file in ``dv_rels`` as 'delete'
     """
@@ -131,90 +129,46 @@ class _TxLogCDFReader(DataSourceStreamReader):
 
     # -- planning (driver: JSON log only, no data files opened) ----------
 
-    def _require(self, rel: str, v0: int, v1: int) -> None:
-        if not os.path.exists(os.path.join(self.path, rel)):
+    def _check_renames(self, renames: list, v0: int, v1: int) -> None:
+        """Every file walks its physical names forward to the stream's
+        DECLARED schema, fixed at reader construction. A rename that
+        schema does not know landed after the stream started: fail
+        the query loudly (the standard streaming schema-change
+        contract: a restart picks it up)."""
+        rn = [list(r) for r in renames]
+        if rn != [list(r) for r in self.renames[: len(rn)]]:
             raise ValueError(
-                f"txlog_cdf: {rel} was vacuumed — the change feed "
-                f"({v0}, {v1}] cannot be reconstructed past the "
-                "retention window"
+                f"txlog_cdf: a column was renamed in ({v0}, {v1}] "
+                f"({rn[-1][0]!r} -> {rn[-1][1]!r}) after this stream "
+                "started — the declared schema is stale; restart the "
+                "streaming query to pick up the new schema"
             )
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         v0, v1 = int(start["v"]), int(end["v"])
         # keep pacing monotone across replays/restarts
         self._hwm = v1 if self._hwm is None else max(self._hwm, v1)
-        # table state BEFORE the commit being planned (at v-1), folded
-        # forward once each commit's delete side is planned. Every
-        # emitted file walks its physical names forward to the
-        # stream's DECLARED schema (fixed at reader construction); a
-        # rename landing MID-STREAM changes the logical schema and
-        # must fail the query loudly (the standard streaming
-        # schema-change contract: restart picks it up)
-        state = txlog_log.state_at(self.path, v0)
-        target_rn = self.renames
-
-        def chain_for(rel: str) -> list:
-            rn = state["renames"]
-            ep = min(
-                int(state["file_epoch"].get(rel, len(rn))), len(target_rn)
-            )
-            return [list(r) for r in target_rn[ep:]]
-
         parts: list[InputPartition] = []
-        for v in range(v0 + 1, v1 + 1):
-            c = txlog_log.read_commit(self.path, v)
-            op = c.get("op")
-            if op == "rename_column":
-                rn = state["renames"]
-                if not (
-                    len(rn) < len(target_rn)
-                    and list(target_rn[len(rn)]) == [c["old"], c["new"]]
-                ):
-                    raise ValueError(
-                        f"txlog_cdf: commit {v} renamed column "
-                        f"{c['old']!r} -> {c['new']!r} after this stream "
-                        "started — the declared schema is stale; restart "
-                        "the streaming query to pick up the new schema"
-                    )
-            elif op != "compact":  # compact is pure layout: no rows change
-                if c.get("dv_targets"):
-                    # MoR commit (delete_dv, update_mor): the
-                    # DV-addressed rows emit as 'delete'; update_mor's
-                    # added files take the insert side below
-                    self._require(c["dv_file"], v0, v1)
-                    for rel in sorted(c["dv_targets"]):
-                        self._require(rel, v0, v1)
-                        parts.append(
-                            _CDFPartition(
-                                "dv_delete", rel, v, [c["dv_file"]],
-                                chain=chain_for(rel),
-                            )
-                        )
-                for rel in sorted(c.get("remove", [])):
-                    excl = _dv_files(state, rel)
-                    for p in [rel, *excl]:
-                        self._require(p, v0, v1)
-                    parts.append(
-                        _CDFPartition(
-                            "delete", rel, v, excl, chain=chain_for(rel)
-                        )
-                    )
-            txlog_log.replay(state, c)
-            if op == "compact":
-                continue
-            # inserts plan under the state AFTER the commit: a
-            # RESTORE's re-added files come back with their restored
-            # DVs, whose rows the insert side must exclude
-            for add in c.get("add", []):
-                excl = _dv_files(state, add["path"])
-                for p in [add["path"], *excl]:
-                    self._require(p, v0, v1)
-                parts.append(
-                    _CDFPartition(
-                        "insert", add["path"], v, excl,
-                        chain=chain_for(add["path"]),
-                    )
+        state = txlog_log.state_at(self.path, v0)
+        for side in txlog_log.change_plan(self.path, state, v0, v1):
+            rn = side.state["renames"]
+            self._check_renames(rn, v0, v1)
+            for rel in side.rels:
+                ep = min(
+                    int(side.state["file_epoch"].get(rel, len(rn))),
+                    len(self.renames),
                 )
+                dv_rels = (
+                    [side.dv_file] if side.dv_file else
+                    [e["file"] for e in side.state["dvs"].get(rel, [])]
+                )
+                parts.append(_CDFPartition(
+                    side.kind, rel, side.version, dv_rels,
+                    chain=[list(r) for r in self.renames[ep:]],
+                ))
+        # the plan folded ``state`` to v1: a rename may be the
+        # window's last commit, with no side after it
+        self._check_renames(state["renames"], v0, v1)
         return parts
 
     # -- decode (EXECUTORS: pyarrow → Arrow RecordBatches) ---------------
@@ -233,14 +187,16 @@ class _TxLogCDFReader(DataSourceStreamReader):
                 "feed cannot be reconstructed past the retention window"
             )
         tbl = pq.read_table(abs_path)
-        if partition.kind == "dv_delete":
-            idx = self._dv_indices(partition.dv_rels, partition.rel)
-            tbl = tbl.take(sorted(idx))
-        elif partition.kind in ("delete", "insert") and partition.dv_rels:
-            # delete: suppress rows a DV already deleted earlier;
-            # insert (restore): suppress rows the restored DVs address
-            excl = self._dv_indices(partition.dv_rels, partition.rel)
-            tbl = tbl.take([i for i in range(tbl.num_rows) if i not in excl])
+        if partition.dv_rels:
+            rows = self._dv_rows(partition.dv_rels, partition.rel)
+            if partition.kind == "dv_delete":
+                tbl = tbl.take(np.unique(rows))
+            else:
+                # delete: rows a DV already deleted earlier; insert
+                # (restore): rows the restored DVs address
+                keep = np.ones(tbl.num_rows, dtype=bool)
+                keep[rows] = False
+                tbl = tbl.filter(pa.array(keep))
         ctype = "insert" if partition.kind == "insert" else "delete"
         if getattr(partition, "chain", None):
             # walk pre-rename physical names forward to the declared
@@ -265,19 +221,19 @@ class _TxLogCDFReader(DataSourceStreamReader):
             else:
                 arrays.append(pa.nulls(n, field.type))
             names.append(field.name)
-        arrays.append(pa.array([ctype] * n, pa.string()))
+        arrays.append(pa.repeat(pa.scalar(ctype, pa.string()), n))
         names.append("_change_type")
-        arrays.append(pa.array([partition.version] * n, pa.int64()))
+        arrays.append(pa.repeat(pa.scalar(partition.version, pa.int64()), n))
         names.append("_commit_version")
         out = pa.table(arrays, names=names)
         yield from out.combine_chunks().to_batches()
 
-    def _dv_indices(self, dv_rels: list[str], rel: str) -> set[int]:
+    def _dv_rows(self, dv_rels: list[str], rel: str) -> np.ndarray:
         """Row positions of ``rel`` addressed by the given DV files."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        idx: set[int] = set()
+        rows = [np.empty(0, dtype=np.int64)]
         for dv_rel in dv_rels:
             dv_abs = os.path.join(self.path, dv_rel)
             if not os.path.exists(dv_abs):
@@ -288,8 +244,8 @@ class _TxLogCDFReader(DataSourceStreamReader):
                 )
             t = pq.read_table(dv_abs, columns=["file_rel", "row_index"])
             hits = t.filter(pc.equal(t.column("file_rel"), rel))
-            idx.update(int(i) for i in hits.column("row_index").to_pylist())
-        return idx
+            rows.append(hits.column("row_index").to_numpy())
+        return np.concatenate(rows)
 
     def commit(self, end: dict) -> None:
         # offsets are just log versions; nothing to clean up

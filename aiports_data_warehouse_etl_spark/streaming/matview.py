@@ -26,7 +26,10 @@ Aggregate classes (the standard incremental-view-maintenance split):
   BOUNDED RESCAN planned: one source scan semi-joined to the flagged
   group keys, whose min/max replace those groups' folded bounds. With
   no flag (deletes strictly inside the bounds, or insert-only slices)
-  the refresh never reads the source.
+  the refresh never reads the source. A slice is insert-only when the
+  source's change plan (``txlog_log.change_plan``, the rule the feed
+  itself is built from) has no ``delete`` or ``dv_delete`` side for
+  it; that is decided from the commit log on the driver, with no job.
 
 Exactly-once without extra bookkeeping: the view is itself a
 ``TxLogTable``, and each refresh commits via ``overwrite_batch_txn``
@@ -118,31 +121,13 @@ class IncrementalAggView:
             .agg(*aggs)
         )
 
-    #: commit ops that can never remove a ROW — appends add rows,
-    #: compact only relocates them, the rest are metadata. Anything
-    #: else (delete/delete_dv/merge/update/overwrite/replace_where/
-    #: restore/clone/...) is conservatively treated as delete-capable.
-    _ROW_ADD_ONLY_OPS = frozenset({
-        "append", "compact", "set_constraint", "drop_constraint",
-        "set_generated", "drop_generated", "set_identity",
-        "drop_identity", "reserve_identity", "rename_column",
-        "bloom_index", "drop_bloom_index", "set_protocol",
-    })
-
-    def _slice_may_delete(self, lo: int, hi: int) -> bool:
-        """Driver-side (commit-JSON only, no Spark job): can the feed
-        slice (lo, hi] contain 'delete' rows? False means the fold can
-        take the insert-only fast path — constant +1 sign, no __del_
-        bound aggregates, and NO rescan join in the plan at all (the
-        dominant per-refresh cost for min/max views on append-heavy
-        sources)."""
-        for v in range(lo + 1, hi + 1):
-            c = self.source._read_commit(v)
-            if c.get("op") not in self._ROW_ADD_ONLY_OPS or c.get(
-                "dv_targets"
-            ):
-                return True
-        return False
+    @staticmethod
+    def _may_delete(plan) -> bool:
+        """Has ``plan`` (``TxLogTable.change_plan`` sides: commit JSON,
+        no job) a ``delete`` or ``dv_delete`` side? If not, the fold
+        takes the insert-only fast path: +1 sign, no __del_ bounds and
+        no rescan join (the dominant cost on append-heavy sources)."""
+        return any(side.kind != "insert" for side in plan)
 
     def refresh(self) -> int | None:
         """Fold source commits (last_applied, latest] into the view.
@@ -152,8 +137,9 @@ class IncrementalAggView:
         (``_merged_agg``), evaluated once (see ``_apply``); a source
         scan, restricted (broadcast semi-join) to the groups whose
         stored bound a delete hit, is planned only when some group is
-        flagged. Insert-only slices (decided from the commit log on the
-        driver, no extra job) never flag a group."""
+        flagged. Insert-only slices (no delete side in the slice's
+        change plan, decided on the driver with no job) never flag a
+        group."""
         last = self.last_applied_version()
         cur = self.source.latest_version()
         if cur <= last:
@@ -164,10 +150,12 @@ class IncrementalAggView:
             # feed identity, and the only sound way to seed min/max)
             merged = self._snapshot_agg(cur).filter(F.col("n_rows") > 0)
             return self.view.overwrite_batch_txn(merged, self._APP, cur)
+        # one plan of the slice: the feed is read from it and the
+        # insert-only decision made on it
+        plan = list(self.source.change_plan(last, cur))
         return self._apply(
-            self.source.changes(last, cur),
-            cur,
-            may_delete=self._slice_may_delete(last, cur),
+            self.source.feed(plan, cur), cur,
+            may_delete=self._may_delete(plan),
         )
 
     def maintain_streaming(self, checkpoint_dir: str):
@@ -212,9 +200,9 @@ class IncrementalAggView:
                 self._apply(
                     fresh,
                     cur=None,
-                    may_delete=self._slice_may_delete(
+                    may_delete=self._may_delete(self.source.change_plan(
                         last, self.source.latest_version()
-                    ),
+                    )),
                 )
 
         return (
@@ -247,9 +235,10 @@ class IncrementalAggView:
         evaluation reads whether any group has ``__rescan`` set (and
         ``max(__hi)``) with no job of its own, and the checkpoint's
         blocks are released once the commit returns or raises. A batch
-        refresh that cannot flag a group (``may_delete=False``, decided
-        driver-side from the commit log, or a view without min/max)
-        skips the checkpoint: the commit is the fold's only reader."""
+        refresh that cannot flag a group (``may_delete=False``: the
+        slice's change plan has no delete side, or a view without
+        min/max) skips the checkpoint: the commit is the fold's only
+        reader."""
         merged = self._merged_agg(feed, may_delete, with_hi=cur is None)
         bounded = may_delete and bool(self.min_cols or self.max_cols)
         if cur is not None and not bounded:

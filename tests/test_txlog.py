@@ -4832,3 +4832,187 @@ def test_checkpoint_without_later_layout_keys_still_opens(spark, tmp_path):
     assert deleted and not live & set(deleted)
     assert all(os.path.exists(os.path.join(path, rel)) for rel in live)
     assert sorted(TxLogTable(spark, path).read().collect()) == expected
+
+
+def _signed(rows) -> dict:
+    """Net multiset of (change-feed) rows: +1 per insert, -1 per
+    delete, keyed by the data columns; zero counts dropped."""
+    net: dict = {}
+    for r in rows:
+        d = r.asDict()
+        sign = 1 if d.pop("_change_type") == "insert" else -1
+        d.pop("_commit_version")
+        key = tuple(sorted(d.items()))
+        net[key] = net.get(key, 0) + sign
+    return {k: n for k, n in net.items() if n}
+
+
+def _diff(tbl, v0: int, v1: int) -> dict:
+    """read(version=v1) minus read(version=v0) as a signed multiset."""
+    net: dict = {}
+    for sign, v in ((1, v1), (-1, v0)):
+        if v < 0:
+            continue
+        for r in tbl.read(version=v).collect():
+            key = tuple(sorted(r.asDict().items()))
+            net[key] = net.get(key, 0) + sign
+    return {k: n for k, n in net.items() if n}
+
+
+def _dv_only_restores(spark, tbl) -> None:
+    """v0: 12 rows in one file; v1: a DV deletes ids 9-11; v2:
+    restore(0) drops the DV, v3: restore(1) brings it back. Neither
+    restore adds or removes a file."""
+    tbl.append(
+        spark.createDataFrame(
+            [(i, i % 3) for i in range(12)], "id int, k int"
+        ).coalesce(1)
+    )
+    tbl.delete_where_dv("id >= 9")
+    assert tbl.restore(0) == 2
+    assert tbl.restore(1) == 3
+    assert tbl.read(version=2).count() == 12
+    assert tbl.read(version=3).count() == 9
+
+
+def test_changes_across_dv_only_restore(spark, tbl):
+    """A restore that changes only deletion vectors changes rows: the
+    feed deletes the file's rows under the old DVs and re-inserts them
+    under the new ones, so each restore nets to exactly the rows the
+    DV hides or shows, and every fold equals the table state."""
+    _dv_only_restores(spark, tbl)
+    back = {(("id", i), ("k", i % 3)): 1 for i in (9, 10, 11)}
+    assert _signed(tbl.changes(1, 2).collect()) == back
+    assert _signed(tbl.changes(2, 3).collect()) == {
+        k: -n for k, n in back.items()
+    }
+    for v0, v1 in ((-1, 2), (-1, 3), (0, 2), (1, 3)):
+        assert _signed(tbl.changes(v0, v1).collect()) == _diff(tbl, v0, v1)
+
+
+def test_txlog_cdf_stream_across_dv_only_restore(spark, tbl, tmp_path):
+    """The streaming twin: the drained txlog_cdf stream across both
+    DV-only restores equals changes() row for row and folds to the
+    restored table."""
+    from aiports_data_warehouse_etl_spark.sources.txlog_stream import (
+        register_txlog_cdf,
+    )
+
+    _dv_only_restores(spark, tbl)
+    register_txlog_cdf(spark)
+    out_dir = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("txlog_cdf")
+        .option("path", tbl.path)
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _bid: df.write.mode("append").parquet(out_dir)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    streamed = spark.read.parquet(out_dir).collect()
+    batch = tbl.changes(-1, tbl.latest_version()).collect()
+    assert sorted(tuple(r) for r in streamed) == sorted(
+        tuple(r) for r in batch
+    )
+    assert _signed(streamed) == _diff(tbl, -1, 3)
+    assert {
+        r.id for r in streamed
+        if r._commit_version == 2 and r._change_type == "insert"
+    } == set(range(12))
+
+
+def test_matview_across_dv_only_restore(spark, tbl, tmp_path):
+    """A count/sum/min/max view refreshed across a restore that drops
+    a deletion vector, and one that brings it back, equals a fresh
+    aggregate of the source each time."""
+    mv = _minmax_view(spark, tbl, str(tmp_path / "view"))
+    tbl.delete_where_dv("val >= 5")   # v1: hits a's max, empties b
+    assert mv.refresh() is not None
+    assert _stored_minmax(mv) == _fresh_minmax(tbl)
+    for version in (0, 1):            # drop the DV, then bring it back
+        tbl.restore(version)
+        assert mv.refresh() is not None
+        assert _stored_minmax(mv) == _fresh_minmax(tbl)
+    assert {r.k for r in mv.read().collect()} == {"a"}
+
+
+def test_change_feed_batch_and_stream_agree_on_every_op(
+    spark, tbl, tmp_path
+):
+    """One history with every op kind. For each window (v0, v1] the
+    txlog_cdf stream's planner and executor give the same multiset of
+    rows as changes(v0, v1), and the fold of each equals read(v1)
+    minus read(v0). The whole history also drains through a real
+    streaming query."""
+    from aiports_data_warehouse_etl_spark.sources.txlog_stream import (
+        _TxLogCDFReader,
+        register_txlog_cdf,
+    )
+
+    def rows(ids, bump=0.0):
+        return spark.createDataFrame(
+            [(i, i % 3, float(i) + bump) for i in ids],
+            "id int, k int, v double",
+        )
+
+    ops = [
+        lambda: tbl.append(rows(range(20)).coalesce(2)),
+        lambda: tbl.append(rows(range(20, 30)).coalesce(1)),
+        lambda: tbl.delete_where("id < 3"),
+        lambda: tbl.delete_where_dv("id IN (5, 6, 21)"),
+        lambda: tbl.update_where("id = 7", {"v": "v + 100"}),
+        lambda: tbl.update_where_mor("id IN (8, 22)", {"v": "v * -1"}),
+        lambda: tbl.merge_upsert(rows([9, 40], bump=0.5), ["id"]),
+        lambda: tbl.merge(
+            rows([10, 11, 41], bump=0.25), keys=["id"],
+            update_set={"v": "s.v"}, delete_condition="s.id = 11",
+        ),
+        lambda: tbl.replace_where(
+            rows([25, 26], bump=9.0), "id >= 25 AND id < 28"
+        ),
+        lambda: tbl.compact(),
+        lambda: tbl.restore(5),
+        lambda: tbl.overwrite(rows([50, 51]).coalesce(1)),
+        lambda: tbl.restore(10),
+    ]
+    for want_v, op in enumerate(ops):
+        op()
+        assert tbl.latest_version() == want_v
+    assert tbl._read_commit(9)["op"] == "compact"
+    last = tbl.latest_version()
+
+    reader = _TxLogCDFReader({"path": tbl.path})
+
+    def streamed(v0, v1):
+        out = []
+        for part in reader.partitions({"v": v0}, {"v": v1}):
+            for batch in reader.read(part):
+                out.extend(tuple(r.values()) for r in batch.to_pylist())
+        return sorted(out)
+
+    windows = [(-1, last), (-1, 4), (2, 6), (4, 9), (8, 10), (9, last)]
+    for v0, v1 in windows:
+        feed = tbl.changes(v0, v1).collect()
+        assert streamed(v0, v1) == sorted(tuple(r) for r in feed), (v0, v1)
+        assert _signed(feed) == _diff(tbl, v0, v1), (v0, v1)
+
+    register_txlog_cdf(spark)
+    out_dir = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("txlog_cdf")
+        .option("path", tbl.path)
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _bid: df.write.mode("append").parquet(out_dir)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    drained = spark.read.parquet(out_dir).collect()
+    assert sorted(tuple(r) for r in drained) == streamed(-1, last)

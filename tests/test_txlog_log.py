@@ -5,6 +5,7 @@ module imports no Spark and is the one place that names log files)."""
 
 from __future__ import annotations
 
+import collections
 import copy
 import json
 import os
@@ -175,6 +176,192 @@ def test_replay_copies_what_it_takes_from_a_commit():
     assert commits == pristine
 
 
+DV2 = "data/e/dv.parquet"
+D, E = "data/f/p0.parquet", "data/g/p0.parquet"
+
+
+def _dv(*files: str) -> list:
+    return [{"file": f, "rows": 1} for f in files]
+
+
+def _touch_files(tmp_path, commits) -> None:
+    for c in commits:
+        rels = [a["path"] for a in c.get("add", [])] + c.get("remove", [])
+        rels += [c["dv_file"]] if c.get("dv_file") else []
+        for rel in rels:
+            (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+            (tmp_path / rel).touch()
+
+
+def _sides(tmp_path, commits, lo: int) -> list:
+    """``change_plan`` over hand-written commits (files present on
+    disk) for (lo, last]: each side as (version, kind, rels, version
+    of the state it is read under, that state's DVs of its rels,
+    dv_file)."""
+    _touch_files(tmp_path, commits)
+    plan = txlog_log.change_plan(
+        str(tmp_path), _fold(*commits[: lo + 1]), lo, len(commits) - 1,
+        read=lambda v: commits[v],
+    )
+    return [
+        (s.version, s.kind, s.rels, s.state["version"],
+         {r: s.state["dvs"][r] for r in s.rels if r in s.state["dvs"]},
+         s.dv_file)
+        for s in plan
+    ]
+
+
+DELETE_DV_A = {"op": "delete_dv", "dv_file": DV, "dv_targets": {A: 1}}
+
+#: history, then the commit under test -> the sides of that commit
+PLANS = {
+    "append_inserts": ([APPEND_AB], [(0, "insert", [A, B], 0, {}, None)]),
+    "delete_dv_is_its_dv_rows": (
+        [APPEND_AB, DELETE_DV_A], [(1, "dv_delete", [A], 0, {}, DV)]
+    ),
+    "update_mor_is_dv_rows_plus_inserts": (
+        [APPEND_AB,
+         {"op": "update_mor", "dv_file": DV, "dv_targets": {A: 1, B: 2},
+          "add": [_add(C)]}],
+        [(1, "dv_delete", [A, B], 0, {}, DV),
+         (1, "insert", [C], 1, {}, None)],
+    ),
+    "compact_has_no_side": (
+        [APPEND_AB, DELETE_DV_A,
+         {"op": "compact", "remove": [A, B], "add": [_add(C, 7)]}],
+        [],
+    ),
+    "rename_has_no_side": (
+        [APPEND_AB, {"op": "rename_column", "old": "v", "new": "w"}], []
+    ),
+    "restore_readds_and_removes": (
+        [APPEND_AB, DELETE_DV_A,
+         {"op": "delete", "remove": [A, B], "add": [_add(C)]},
+         {"op": "restore", "add": [_add(A), _add(B, 5)], "remove": [C],
+          "dvs": {A: _dv(DV)}}],
+        [(3, "delete", [C], 2, {}, None),
+         (3, "insert", [A, B], 3, {A: _dv(DV)}, None)],
+    ),
+    "restore_dropping_dvs": (
+        [APPEND_AB, DELETE_DV_A, {"op": "restore", "dvs": {}}],
+        [(2, "delete", [A], 1, {A: _dv(DV)}, None),
+         (2, "insert", [A], 2, {}, None)],
+    ),
+    "restore_bringing_dvs_back": (
+        [APPEND_AB, DELETE_DV_A, {"op": "restore", "dvs": {}},
+         {"op": "restore", "dvs": {A: _dv(DV)}}],
+        [(3, "delete", [A], 2, {}, None),
+         (3, "insert", [A], 3, {A: _dv(DV)}, None)],
+    ),
+}
+for _op in ("delete", "update", "merge", "overwrite"):
+    # a copy-on-write rewrite deletes the removed file's rows under the
+    # DVs active before it (those rows were deleted already) and
+    # inserts the rewritten file's
+    PLANS[f"cow_{_op}"] = (
+        [APPEND_AB, DELETE_DV_A,
+         {"op": _op, "remove": [A], "add": [_add(C, 2)]}],
+        [(2, "delete", [A], 1, {A: _dv(DV)}, None),
+         (2, "insert", [C], 2, {}, None)],
+    )
+
+
+@pytest.mark.parametrize("name", sorted(PLANS))
+def test_change_plan_per_commit_shape(tmp_path, name):
+    commits, expected = PLANS[name]
+    assert _sides(tmp_path, commits, len(commits) - 2) == expected
+
+
+def test_change_plan_folds_the_given_state_to_hi(tmp_path):
+    """The plan folds the state it is given forward in place; the
+    sides it yielded keep the state they were planned under."""
+    commits = [APPEND_AB, DELETE_DV_A, {"op": "restore", "dvs": {}},
+               {"op": "delete", "remove": [A]}]
+    _touch_files(tmp_path, commits)
+    state = _fold(commits[0])
+    sides = list(txlog_log.change_plan(str(tmp_path), state, 0, 3,
+                                       read=lambda v: commits[v]))
+    assert state == _fold(*commits)
+    assert [(s.version, s.kind, s.state["dvs"]) for s in sides] == [
+        (1, "dv_delete", {}),
+        (2, "delete", {A: _dv(DV)}),
+        (2, "insert", {}),
+        (3, "delete", {}),
+    ]
+
+
+def test_change_plan_raises_on_vacuumed_files(tmp_path):
+    commits = [APPEND_AB, DELETE_DV_A, {"op": "delete", "remove": [A]}]
+    _touch_files(tmp_path, commits)
+    os.remove(tmp_path / DV)
+    # the rewrite's delete side excludes A's DV rows: the DV is needed
+    with pytest.raises(ValueError, match="vacuumed"):
+        list(txlog_log.change_plan(str(tmp_path), _fold(commits[0]), 0, 2,
+                                   read=lambda v: commits[v]))
+
+
+def test_change_plan_folds_to_the_state_difference(tmp_path):
+    """A row-level model: each data file holds named rows and each DV
+    addresses row positions. For every window (lo, hi] of a history
+    with every commit shape, the signed multiset of the plan's rows
+    equals the rows live at hi minus those live at lo. A DV added
+    after a side was planned must not reach that side's state."""
+    rows = {A: ["a0", "a1", "a2"], B: ["b0", "b1", "b2", "b3", "b4"],
+            C: ["c0"], D: ["a0!", "a1!"], E: ["b1", "b3"]}
+    dv3 = "data/h/dv.parquet"
+    dv_rows = {DV: {A: {0}}, DV2: {A: {1}, B: {0, 2}}, dv3: {B: {4}}}
+    commits = [
+        APPEND_AB,                                            # v0
+        DELETE_DV_A,                                          # v1
+        {"op": "update_mor", "dv_file": DV2,
+         "dv_targets": {A: 1, B: 2}, "add": [_add(C, 1)]},    # v2
+        {"op": "restore", "remove": [C], "dvs": {}},          # v3 -> v0
+        {"op": "restore", "add": [_add(C, 1)],
+         "dvs": {A: _dv(DV, DV2), B: _dv(DV2)}},              # v4 -> v2
+        {"op": "delete_dv", "dv_file": dv3,
+         "dv_targets": {B: 1}},                               # v5
+        {"op": "update", "remove": [A], "add": [_add(D, 2)]},  # v6
+        {"op": "compact", "remove": [B], "add": [_add(E, 2)]},  # v7
+        {"op": "rename_column", "old": "v", "new": "w"},       # v8
+        {"op": "overwrite", "remove": [C, D, E],
+         "add": [_add(A)]},                                    # v9
+    ]
+    _touch_files(tmp_path, commits)
+
+    def visible(rel, dvs):
+        hidden = {i for e in dvs for i in dv_rows[e["file"]].get(rel, ())}
+        return [r for i, r in enumerate(rows[rel]) if i not in hidden]
+
+    def live(v):
+        state = _fold(*commits[: v + 1])
+        return collections.Counter(
+            r for rel in state["files"]
+            for r in visible(rel, state["dvs"].get(rel, []))
+        )
+
+    for lo in range(-1, len(commits)):
+        for hi in range(lo, len(commits)):
+            fold = collections.Counter()
+            # planned in full before any side is read, as a held
+            # plan (matview refresh) is
+            for s in list(txlog_log.change_plan(
+                str(tmp_path), _fold(*commits[: lo + 1]), lo, hi,
+                read=lambda v: commits[v],
+            )):
+                for rel in s.rels:
+                    if s.kind == "dv_delete":
+                        got = [rows[rel][i] for i in dv_rows[s.dv_file][rel]]
+                    else:
+                        got = visible(rel, s.state["dvs"].get(rel, []))
+                    for r in got:
+                        fold[r] += 1 if s.kind == "insert" else -1
+            want = live(hi)
+            want.subtract(live(lo))
+            assert {r: n for r, n in fold.items() if n} == {
+                r: n for r, n in want.items() if n
+            }, (lo, hi)
+
+
 def _table_with_commits(tmp_path, n: int, **kw) -> TxLogTable:
     """A table built from hand-written commits on the Spark-free
     commit path (``TxLogTable(None, ...)``, as the streaming sink
@@ -195,6 +382,22 @@ def test_snapshot_does_not_alias_memoized_commits(tmp_path):
     t._snapshot(0)["files"][rel]["rows"] = 999
     assert t._read_commit(0) == on_disk
     assert t.count_rows(1) == 6
+
+
+def test_table_change_plan_memoizes_the_state_it_ends_at(tmp_path):
+    """``TxLogTable.change_plan`` folds a copy of the snapshot at its
+    start, leaving that snapshot as it was, and once exhausted its
+    fold is the memoized snapshot at its end."""
+    t = _table_with_commits(tmp_path, 4)
+    for v in range(4):
+        (tmp_path / "t" / f"data/t{v}/p0.parquet").parent.mkdir(parents=True)
+        (tmp_path / "t" / f"data/t{v}/p0.parquet").touch()
+    start = copy.deepcopy(t._snapshot(1))
+    sides = list(t.change_plan(1, 3))
+    assert [(s.version, s.kind) for s in sides] == [(2, "insert"), (3, "insert")]
+    assert t._snapshot(1) == start
+    assert 3 in t._snap_memo
+    assert t._snapshot(3) == txlog_log.state_at(t.path, 3)
 
 
 def test_checkpoint_tmp_is_fsynced_before_publish(tmp_path, monkeypatch):
